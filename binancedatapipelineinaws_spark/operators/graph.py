@@ -36,8 +36,8 @@ PR_ITERS = 3  # fixed unrolled power iterations (the gate's horizon)
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 PR_MINSUP = 2  # co-purchase support floor bounding the edge list
 # Densification cap (r12): per-node top-K neighbor truncation for the
-# *_capped variants.  The r11 x1000 drill (tools/drill_graph.py
-# --shared-parts) showed that under FIXED-CATALOG densification (1000x
+# *_capped variants.  The r11 x1000 drill (SCALING.md, shared-parts
+# mode) showed that under FIXED-CATALOG densification (1000x
 # more orders over the same part catalog) the support floor stops
 # bounding anything — every pair crosses it, degrees densify, and the
 # degree-ordered wedge count grows ~9.3e5x.  The cap is MUTUAL top-K
@@ -546,7 +546,7 @@ def q_ext_triangles_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap exists FOR: the wedge join's O(E^1.5) bound is driven by the
     degree distribution, and the mutual cap's hard degree <= K bound
     turns the x1000 shared-catalog wedge blow-up (~9.3e5x,
-    tools/drill_graph.py) into a hard N*C(K,2) ceiling while keeping
+    SCALING.md) into a hard N*C(K,2) ceiling while keeping
     the strongest co-purchase structure (exactly what a mutual-kNN
     sparsified similarity graph keeps).
     Same degree-ordered orientation + single closing equi-join as the

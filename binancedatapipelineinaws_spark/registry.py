@@ -4,6 +4,9 @@ DuckDB runs over the same parquet for the correctness gate.
 
 Every operator the engine claims is registered here exactly once; the
 driver contract file ``__spark_entry__.py`` just re-exports this.
+``all_specs``, ``queries`` and ``oracle_sql`` iterate in registration
+order: the order the query modules were first imported, then
+definition order within each module.  The registry reads no file.
 """
 
 from __future__ import annotations
@@ -75,162 +78,10 @@ def _load_all() -> None:
     )
 
 
-# The driver's correctness gate checks registrations in iteration order and
-# caps a round at ~50 queries (CORRECTNESS_r01.json stopped exactly at the
-# 50th registration).  Ordering is therefore coverage policy:
-# `_verified_names()` reads the driver's own CORRECTNESS_r*.json records
-# (latest record per name wins) and `all_specs` front-loads queries whose
-# latest driver row is not clean, so every round the ~50-query window
-# lands on the least-verified part of the surface and coverage rotates to
-# completion by itself.  Three hand-tuned lists refine that policy for
-# this round: `_FORCE_FIRST` (oracle-changed re-verifies, ahead of
-# everything), `_DEFER` (late additions queued behind the earlier
-# unverified batch), and `_PRIORITY` (hash-identical plan rewrites that
-# may safely be displaced).
-
-# Queries whose ORACLE SQL changed: their old driver rows were
-# produced against a DIFFERENT oracle, so a fresh row under the new
-# oracle is worth more than any other slot — `all_specs` puts these
-# ahead of even never-verified queries so the ~50-query window can
-# never squeeze them out.
-_FORCE_FIRST: tuple[str, ...] = (
-    # r11: empty — r10's rewritten-oracle entry (q_ext_dedup_horizon)
-    # landed its fresh green row in CORRECTNESS_r10 and rejoins the
-    # age-ordered rotation.  No oracle changed this round: the r11
-    # semdedup/q12 work is plan-only (results hash-identical, gated by
-    # the local serial replica), so every window slot beyond the new
-    # registrations drains the r4/r5 verification tier (VERDICT r10
-    # item 1).
-)
-
-# Late additions explicitly queued BEHIND the earlier unverified batch
-# when a round's 50-slot window is already full.
-_DEFER: tuple[str, ...] = (
-    # r12: empty.  Window math this round: 6 new r12 ids (unverified,
-    # so they take the first 6 slots) + ~44 oldest green rows = the
-    # whole 16-row r5 tier plus the 28 oldest r6 rows.  After r12 the
-    # oldest latest-row anywhere is r6 (VERDICT r11 item 1's "done"
-    # condition) and the staleness ratchet (STALENESS_BOUND_ROUNDS =
-    # 6) stays green.
-)
-
-# Hash-identical plan rewrites whose existing clean driver rows remain
-# truthful; safe to displace from the window.
-_PRIORITY: tuple[str, ...] = ()
-
-
-def _verified_rounds(repo_root: Optional[str] = None) -> dict[str, int]:
-    """Map of query name -> round number of its LATEST clean driver
-    row (a value-verified pass with the hash matching, or a completed
-    rows-only run).  Rows that errored OR hash-mismatched don't count —
-    those need the window again.  A later failure un-verifies an
-    earlier pass: the newest driver record for a name wins, so a query
-    that regresses (e.g. after a testdata format change) re-enters the
-    window even if it was green in a previous round.  The round number
-    feeds the freshness rotation in ``all_specs``: with everything
-    verified at least once, the ~50-slot driver window refreshes the
-    OLDEST rows first (VERDICT r7 item 4 — 35 rows dated to r1 and 12
-    to r2 while slots went to already-fresh queries)."""
-    import glob
-    import json
-    import os
-    import re
-
-    if repo_root is None:
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, Optional[int]] = {}
-    for path in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                records = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, rec in records.items():
-            if not isinstance(rec, dict):
-                continue
-            latest[name] = rnd if _is_clean_record(rec) else None
-    return {name: rnd for name, rnd in latest.items() if rnd is not None}
-
-
-def _verified_names(repo_root: Optional[str] = None) -> set[str]:
-    """Names with a clean latest driver row (see _verified_rounds)."""
-    return set(_verified_rounds(repo_root))
-
-
-# Absolute staleness ratchet (r9 verdict item 8): no row in the
-# cumulative driver record may lag the newest round by more than this
-# many rounds.  With ~50 slots/round and 295+ ids the age-ordered
-# window refreshes everything within ceil(N/50) rounds; 6 adds no
-# slack beyond that — registering a flood of new ids that would push
-# any row past the bound fails tests/test_registry.py BEFORE the
-# round burns its slots.
-STALENESS_BOUND_ROUNDS = 6
-
-
-def stale_rows(
-    vrounds: Optional[dict[str, int]] = None,
-    bound: int = STALENESS_BOUND_ROUNDS,
-) -> list[str]:
-    """Names whose latest clean driver row lags the newest round in
-    the record by more than ``bound`` rounds.  Empty on a healthy
-    record; non-empty means the window rotation has fallen behind
-    (ship fewer new ids, or force-first the stale rows)."""
-    if vrounds is None:
-        vrounds = _verified_rounds()
-    if not vrounds:
-        return []
-    cur = max(vrounds.values())
-    return sorted(n for n, r in vrounds.items() if cur - r > bound)
-
-
-def _is_clean_record(rec: dict) -> bool:
-    """True only for a fully-clean driver row: value-verified with the
-    hash matching, or a completed rows-only run (no oracle by design)."""
-    if rec.get("err") == "no_oracle":
-        return True
-    return (
-        rec.get("err") is None
-        and rec.get("rows_match") is True
-        and rec.get("schema_match") is True
-        and rec.get("hash_match") is True
-    )
-
-
 def all_specs() -> dict[str, QuerySpec]:
+    """Every registered query, in registration order."""
     _load_all()
-    listed = list(_FORCE_FIRST) + list(_DEFER) + list(_PRIORITY)
-    missing = [n for n in listed if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"priority list names unregistered queries: {missing}")
-    vrounds = _verified_rounds()
-    # stable base order: the round's hand-tuned sequence, then module
-    # registration order for anything not listed
-    pinned = set(_FORCE_FIRST) | set(_PRIORITY)
-    base = (
-        list(_FORCE_FIRST)
-        + list(_PRIORITY)
-        + [n for n in _REGISTRY if n not in pinned]
-    )
-    # window order: forced re-verifies, then never-verified (deferred
-    # late additions last), then the green tail OLDEST driver row
-    # first — with full coverage achieved (r7), each round's ~50-slot
-    # window now refreshes the most stale verifications, so every row
-    # in the cumulative record stays at most a few rounds old.
-    unverified = [
-        n for n in base if n not in vrounds and n not in set(_DEFER)
-    ] + [n for n in _DEFER if n not in vrounds]
-    base_pos = {n: i for i, n in enumerate(base)}
-    green_by_age = sorted(
-        (n for n in base if n in vrounds),
-        key=lambda n: (vrounds[n], base_pos[n]),
-    )
-    ordered = {n: _REGISTRY[n] for n in _FORCE_FIRST}
-    ordered.update((n, _REGISTRY[n]) for n in unverified)
-    ordered.update((n, _REGISTRY[n]) for n in green_by_age)
-    ordered.update((n, _REGISTRY[n]) for n in base if n not in ordered)
-    return ordered
+    return dict(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:

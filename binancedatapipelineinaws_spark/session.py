@@ -17,12 +17,28 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """About 60% of physical memory, capped at 24g (24g when
+    ``MemTotal`` can't be read)."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(
+                int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24 * 1024, kb * 6 // 10240)}m"
+
+
 def get_spark(
     app_name: str = "binance-pipeline-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the CPUs this process may run on (what ``nproc`` prints)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
@@ -34,7 +50,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
         # static conf (fixed at context creation): the oracle gate
         # collects FULL results by design, and at sf10 a 10M-row window
         # query serializes >1 GiB of task results — the 1g default

@@ -275,18 +275,20 @@ def upsert_table_sink(
     the batch operator `operators/cdc.q_ext_upsert_latest`: union the
     version-stamped sides, one key-partitioned row_number keeps each
     key's newest record.  This plain-parquet stand-in rewrites to a
-    fresh directory and atomically renames it in, so readers never see
-    a half-written table; the whole merge is idempotent under batch
-    replay (re-merging the same records is a no-op), which restores
+    fresh directory and renames it in (`_publish`), so readers never see
+    a half-written table; `_recover` at the top of every batch restores
+    the last published table after a crash between the two publish
+    renames.  The whole merge is idempotent under batch replay
+    (re-merging the same records is a no-op), which restores
     exactly-once on top of foreachBatch's at-least-once contract.
     """
     import os
-    import shutil
 
     from pyspark.sql import Window
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        _recover(table_dir)
         in_batch = Window.partitionBy(key_col).orderBy(
             F.desc("time"), F.desc("price")
         )
@@ -311,11 +313,7 @@ def upsert_table_sink(
             merged = incoming.drop("version")
         tmp_dir = f"{table_dir}.tmp-{batch_id}"
         merged.write.mode("overwrite").parquet(tmp_dir)
-        old_dir = f"{table_dir}.old-{batch_id}"
-        if os.path.isdir(table_dir):
-            os.rename(table_dir, old_dir)
-        os.rename(tmp_dir, table_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        _publish(tmp_dir, table_dir, batch_id)
 
     writer = (
         canonical.writeStream.foreachBatch(merge_batch)
@@ -534,11 +532,25 @@ def _merge_applied_max(table_dir: str) -> int:
         return -1
 
 
-def _merge_recover(table_dir: str) -> None:
-    """Finish or roll back a `merge_state_sink` publish interrupted by
-    a crash.  Publish is two renames (table -> .old-N, .tmp-N ->
-    table); a crash between them leaves the table absent with the
-    `.old-N` snapshot intact — restore the newest snapshot, then drop
+def _publish(tmp_dir: str, table_dir: str, batch_id: int) -> None:
+    """Publish a staged table version: rename(table -> .old-N), then
+    rename(.tmp-N -> table), then drop the snapshot.  POSIX rename(2)
+    can't swap two directories in one call, so a crash between the two
+    renames leaves the table absent with `.old-N` intact; `_recover`
+    at the top of the next batch restores it."""
+    import os
+    import shutil
+
+    old_dir = f"{table_dir}.old-{batch_id}"
+    if os.path.isdir(table_dir):
+        os.rename(table_dir, old_dir)
+    os.rename(tmp_dir, table_dir)
+    shutil.rmtree(old_dir, ignore_errors=True)
+
+
+def _recover(table_dir: str) -> None:
+    """Finish or roll back a `_publish` interrupted by a crash: if the
+    table is absent, restore the newest `.old-N` snapshot, then drop
     any leftover `.old-*` / `.tmp-*` staging directories."""
     import glob
     import os
@@ -546,8 +558,8 @@ def _merge_recover(table_dir: str) -> None:
 
     olds = glob.glob(f"{table_dir}.old-*")
     if not os.path.isdir(table_dir) and olds:
-        # the restored snapshot's _applied_max excludes the batch that
-        # was being published, so that batch simply re-merges
+        # the restored snapshot predates the batch that was being
+        # published, so that batch simply re-merges
         newest = max(olds, key=lambda p: int(p.rsplit("-", 1)[1]))
         os.rename(newest, table_dir)
         olds.remove(newest)
@@ -583,16 +595,12 @@ def merge_state_sink(
     checkpoint resets numbering and is out of scope, as with Delta's
     txn tracking.
 
-    Crash safety: POSIX rename(2) can't swap two directories in one
-    call, so publish is rename(table_dir -> .old-N) then
-    rename(.tmp-N -> table_dir) — a crash between the two leaves
-    table_dir absent with the `.old-N` snapshot intact.  `_recover`
-    runs at the top of every batch (and therefore on restart): it
-    renames the newest `.old-*` back into place before the marker
-    check, so the restarted query sees the last published state +
-    marker and simply re-merges the in-flight batch.  Without that
-    restore, a crash in the publish window would silently zero the
-    state table AND its markers (r9 advice, medium).
+    Crash safety: `_recover` runs at the top of every batch (and
+    therefore on restart) before the marker check, so after a crash
+    between `_publish`'s two renames the restarted query sees the last
+    published state + marker and simply re-merges the in-flight batch.
+    Without that restore, a crash in the publish window would silently
+    zero the state table AND its markers (r9 advice, medium).
 
     Scale: the per-batch plan is the batch MERGE's — one user-keyed
     partial aggregate of the (small) batch, one co-keyed full outer
@@ -603,7 +611,7 @@ def merge_state_sink(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _merge_recover(table_dir)
+        _recover(table_dir)
         if os.path.isdir(table_dir) and batch_id <= _merge_applied_max(
             table_dir
         ):
@@ -657,17 +665,13 @@ def merge_state_sink(
             )
         )
         # stage the new table version + its max-applied marker, then
-        # publish via rename; _recover makes the two-rename window safe
+        # publish; _recover makes the two-rename window safe
         tmp_dir = f"{table_dir}.tmp-{batch_id}"
         shutil.rmtree(tmp_dir, ignore_errors=True)
         merged.write.mode("overwrite").parquet(os.path.join(tmp_dir, "data"))
         with open(os.path.join(tmp_dir, "_applied_max"), "w") as f:
             f.write(str(batch_id))
-        old_dir = f"{table_dir}.old-{batch_id}"
-        if os.path.isdir(table_dir):
-            os.rename(table_dir, old_dir)
-        os.rename(tmp_dir, table_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        _publish(tmp_dir, table_dir, batch_id)
 
     writer = (
         events.writeStream.foreachBatch(merge_batch)

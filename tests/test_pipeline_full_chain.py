@@ -186,7 +186,7 @@ def test_ws_to_merge_state_crash_restart(spark, tmp_path):
          it a no-op — totals don't double.
       B. killed BETWEEN the two publish renames (table_dir absent,
          .old-N snapshot on disk) AND before the checkpoint commit:
-         _merge_recover restores the snapshot, then the re-delivered
+         _recover restores the snapshot, then the re-delivered
          batch no-ops against the restored marker.
 
     Then a NEW spooled minute arrives and the restarted query

@@ -1,200 +1,26 @@
-"""Registry coverage-rotation policy tests (no SparkSession needed).
-
-The driver's correctness window caps at ~50 queries/round; `all_specs`
-front-loads queries whose LATEST driver record is not clean.  Round 2's
-verdict found the original `_verified_names` counted a rows_match-true /
-hash_match-false record as verified, which would have rotated the one
-failing query out of the window forever — these tests pin the fixed
-semantics.
-"""
+"""Registry tests (no SparkSession needed): iteration order, oracle
+coverage, oracle planning in DuckDB, and the bench.py stdout contract."""
 
 from __future__ import annotations
 
-from binancedatapipelineinaws_spark.registry import _is_clean_record
 
-
-def _rec(rows=True, schema=True, hash_=True, err=None):
-    return {
-        "rows_match": rows,
-        "schema_match": schema,
-        "hash_match": hash_,
-        "spark_rows": 1,
-        "oracle_rows": 1,
-        "err": err,
-    }
-
-
-def test_clean_pass_is_verified():
-    assert _is_clean_record(_rec())
-
-
-def test_hash_fail_is_not_verified():
-    # the round-2 bug: rows matched, hash didn't -> must re-enter window
-    assert not _is_clean_record(_rec(hash_=False))
-
-
-def test_rows_fail_is_not_verified():
-    assert not _is_clean_record(_rec(rows=False))
-
-
-def test_schema_fail_is_not_verified():
-    assert not _is_clean_record(_rec(schema=False))
-
-
-def test_error_is_not_verified():
-    assert not _is_clean_record(
-        _rec(rows=None, schema=None, hash_=None, err="AnalysisException: ...")
-    )
-
-
-def test_rows_only_no_oracle_is_verified():
-    assert _is_clean_record(
-        _rec(rows=None, schema=None, hash_=None, err="no_oracle")
-    )
-
-
-def test_latest_record_wins(tmp_path):
-    """A query green in round N but red in round N+1 must be unverified."""
+def test_all_specs_is_registration_order_and_reads_no_file(tmp_path, monkeypatch):
+    """``all_specs``, ``queries`` and ``oracle_sql`` iterate in
+    registration order, and no file in the working directory (such as
+    a stray correctness record) can change that order."""
     import json
-
-    from binancedatapipelineinaws_spark.registry import _verified_names
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"q_a": _rec(), "q_b": _rec()})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"q_a": _rec(hash_=False)})
-    )
-    verified = _verified_names(repo_root=str(tmp_path))
-    assert "q_b" in verified
-    assert "q_a" not in verified  # r02 hash-fail overrides r01 pass
-
-
-def test_err_then_fixed_pass_is_verified(tmp_path):
-    import json
-
-    from binancedatapipelineinaws_spark.registry import _verified_names
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"q_a": _rec(rows=None, schema=None, hash_=None, err="boom")})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"q_a": _rec()}))
-    assert "q_a" in _verified_names(repo_root=str(tmp_path))
-
-
-def test_round_work_fits_driver_window():
-    """The driver checks ~50 queries per round in all_specs() order.
-    The ORACLE-CHANGED `_FORCE_FIRST` queries must open the window
-    (their old rows were computed against a different oracle), every
-    never-verified query must land in the first 50 UNLESS it is
-    explicitly queued in `_DEFER` for the next round, and
-    hash-identical `_PRIORITY` rewrites may be displaced — their
-    existing clean rows remain truthful."""
-    from binancedatapipelineinaws_spark.registry import (
-        _DEFER,
-        _FORCE_FIRST,
-        _verified_names,
-        all_specs,
-    )
-
-    order = list(all_specs())
-    assert order[: len(_FORCE_FIRST)] == list(_FORCE_FIRST)
-    first50 = set(order[:50])
-    never_verified = set(order) - _verified_names()
-    missing_new = never_verified - first50 - set(_DEFER)
-    assert not missing_new, missing_new
-    # the oracle-changed prefix must never be displaced from the window
-    assert not (set(_FORCE_FIRST) - first50)
-    # the defer queue must never grow past the next round's slack
-    assert len(_DEFER) <= 14
-
-
-def test_window_budget_not_exceeded():
-    """Forward invariant (r6 verdict #8): (forced re-verifies) +
-    (queries with no clean driver row) must fit one ~50-slot driver
-    window, minus `_DEFER` entries explicitly pushed to the next round.
-    A burst of new registrations past this budget would silently delay
-    verification of OTHER unverified queries — fail at registration
-    time instead."""
-    from binancedatapipelineinaws_spark.registry import (
-        _DEFER,
-        _FORCE_FIRST,
-        _verified_names,
-        all_specs,
-    )
-
-    specs = set(all_specs())
-    unverified = specs - _verified_names()
-    demand = len(set(_FORCE_FIRST) | unverified) - len(
-        set(_DEFER) - _verified_names()
-    )
-    assert demand <= 50, (
-        f"window budget exceeded: {demand} queries need a driver row "
-        "this round; defer the excess via _DEFER"
-    )
-
-
-def test_window_is_age_optimal_and_staleness_bounded():
-    """Forward invariant (r8 verdict #1/#8): the ~50-slot driver window
-    must always land on the STALEST verifications, and no row in the
-    cumulative driver record may lag further than one full rotation of
-    the registry (ceil(N/50) + 2 rounds of slack for forced re-verifies
-    and deferred late additions).  A future round that floods new ids
-    or mis-orders the window fails here at registration time, before
-    the round burns its slots."""
-    import math
 
     from binancedatapipelineinaws_spark import registry
 
-    order = list(registry.all_specs())
-    vrounds = registry._verified_rounds()
-    pinned = set(registry._FORCE_FIRST) | set(registry._PRIORITY)
-    window, tail = order[:50], order[50:]
+    specs = list(registry.all_specs())
+    assert specs == list(registry.queries()) == list(registry._REGISTRY)
+    assert set(registry.oracle_sql()) <= set(specs)
 
-    # age-optimality: every green row left OUT of the window is at
-    # least as fresh as every non-pinned green row IN the window
-    in_ages = [vrounds[n] for n in window if n in vrounds and n not in pinned]
-    out_ages = [vrounds[n] for n in tail if n in vrounds]
-    if in_ages and out_ages:
-        assert max(in_ages) <= min(out_ages), (
-            "driver window skips a staler green row: "
-            f"in-window max vintage r{max(in_ages)} > "
-            f"out-of-window min vintage r{min(out_ages)}"
-        )
-
-    # staleness bound: the oldest row anywhere lags the newest round by
-    # at most one full window rotation (+2 slack)
-    cur = max(vrounds.values())
-    max_lag = math.ceil(len(order) / 50) + 2
-    stalest = min(vrounds, key=vrounds.get)
-    assert cur - vrounds[stalest] <= max_lag, (
-        f"{stalest} last verified r{vrounds[stalest]}, now r{cur}: "
-        f"lag {cur - vrounds[stalest]} > {max_lag} — the window "
-        "rotation is falling behind; ship fewer new ids"
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
+        json.dumps({specs[-1]: {"err": "boom"}, "q_unregistered": {}})
     )
-
-
-def test_absolute_staleness_ratchet():
-    """r9 verdict item 8: an ABSOLUTE bound on row age, testable on a
-    hypothetical record — any row lagging the newest round by more
-    than STALENESS_BOUND_ROUNDS (6) is flagged."""
-    from binancedatapipelineinaws_spark import registry
-
-    assert registry.STALENESS_BOUND_ROUNDS == 6
-    # hypothetical stale record: lag 7 flagged, lag 6 tolerated
-    assert registry.stale_rows({"q_old": 1, "q_new": 8}) == ["q_old"]
-    assert registry.stale_rows({"q_old": 2, "q_new": 8}) == []
-    # multiple stale rows all reported, sorted
-    assert registry.stale_rows({"b": 1, "a": 1, "q_new": 9}) == ["a", "b"]
-    # empty record is healthy (fresh repo)
-    assert registry.stale_rows({}) == []
-    # the REAL cumulative record must satisfy the ratchet
-    live = registry.stale_rows()
-    assert live == [], (
-        f"{len(live)} driver rows older than "
-        f"{registry.STALENESS_BOUND_ROUNDS} rounds: {live[:10]} — the "
-        "window rotation fell behind; ship fewer new ids this round"
-    )
+    monkeypatch.chdir(tmp_path)
+    assert list(registry.all_specs()) == specs
 
 
 def test_every_oracle_plans_in_duckdb():

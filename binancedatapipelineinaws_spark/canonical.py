@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -137,5 +136,4 @@ def btcusdt(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_canonicalize_btcusdt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full canonicalization layer end-to-end (main.py:56-66)."""
-    prepare(spark)
     return btcusdt(spark, sf_dir)

@@ -29,7 +29,7 @@ from binancedatapipelineinaws_spark.functions.similarity import (
     quantized_codes,
 )
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 KMEANS_K = 8
@@ -158,7 +158,6 @@ def q_ext_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (both the assignment and update read them); centroid frames
     are K rows, so lineage stays flat across iterations.  Output joins
     the source label for cluster-vs-label inspection."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     codes = quantized_codes(emb).transform(scoped_persist)
     init = codes.filter(F.col("vec_id") < KMEANS_K).select(
@@ -203,7 +202,6 @@ def q_ext_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clustering per branch)."""
     from pyspark.sql import Window
 
-    prepare(spark)
     sizes = (
         q_ext_kmeans(spark, sf_dir)
         .groupBy("cluster")

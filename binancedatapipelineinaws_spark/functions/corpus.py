@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 DUPSPAN_N = 5  # positional n-gram width
@@ -75,7 +75,6 @@ def q_ext_dupspan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = docs.select("doc_id", F.split("text", " ").alias("words"))
     # explode alone in this select: a gram computed here would be pushed
@@ -146,7 +145,6 @@ def q_ext_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (len-1) DIV stride, so Spark and DuckDB enumerate identical
     (start, length) windows, including the short final chunk.
     """
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = docs.select("doc_id", F.split("text", " ").alias("words"))
     pos = w.select(
@@ -208,7 +206,6 @@ def q_ext_source_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds both sides of the self-join, so it is persisted — without it
     Spark re-executes the full scan+explode+aggregate per side.
     """
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select("source", F.explode(F.split("text", " ")).alias("term"))
@@ -303,7 +300,6 @@ def q_ext_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gram shuffle is the only exchange.  At 100 TB the same plan
     runs incrementally: new-crawl grams join against the first_seen
     table instead of recomputing it."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -472,7 +468,6 @@ def q_ext_longest_dupspan(spark: SparkSession, sf_dir: str) -> DataFrame:
     satisfies the (doc_id, grp) and doc_id aggregates) — linear in
     corpus grams, no pair join, boilerplate shared by k docs costs k
     rows."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     _, g = _dupspan_words_and_grams(docs)
     per_doc = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
@@ -538,7 +533,6 @@ def q_ext_trim_dupspan(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back to the per-doc words; no pair join anywhere."""
     from pyspark.sql import Window
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     w, g = _dupspan_words_and_grams(docs)
     runlens = _dupspan_runlens(g)
@@ -617,7 +611,6 @@ def q_ext_strip_dupspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds the text map-only.  Token positions are 0-based in both
     engines (DuckDB's filter lambda index is 1-based, shifted in the
     oracle)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     w, g = _dupspan_words_and_grams(docs)
     covered = (
@@ -742,7 +735,6 @@ def q_ext_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the oracle stays exact.  All counts integer-exact."""
     from pyspark.sql.window import Window
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     sents = normalized_sentences(docs)
     per = sents.groupBy("s", "source").agg(F.count("*").alias("cnt"))

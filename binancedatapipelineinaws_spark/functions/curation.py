@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.functions.dedup import duck_hex32, hex32
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 # --- within-document repetition (Gopher Rae et al. 2021, Table A1) ----------
@@ -87,7 +87,6 @@ def q_ext_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the most-frequent-word fraction (longest run in the sorted word
     list via a linear fold), composed into the Gopher-style gate — one
     map-only projection, zero shuffles."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("words")
     )
@@ -191,7 +190,6 @@ def q_ext_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its distinct word {DECONTAM_N}-grams that also occur in the
     benchmark slice (doc_id % {BENCH_MOD} == 0).  Benchmark n-gram
     hashes are broadcast; one shuffle total (the doc_id count)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     grams = docs.select(
         "doc_id",
@@ -277,7 +275,6 @@ def q_ext_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just counts).  Pure codegen projection — map-only at any
     scale.  Emails are redacted first so their digit runs don't
     double-count as long numbers."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     injected = F.concat(
         F.col("text"),
@@ -375,7 +372,6 @@ def q_ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "words", F.split("text", " ")
     )
@@ -456,7 +452,6 @@ def q_ext_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins, no windows), then a rules-bounded aggregate — a single scan
     at any corpus size, and the funnel order is explicit in the CASE
     chain so rule-attribution is deterministic."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "words", F.split("text", " ")
     )
@@ -542,7 +537,6 @@ def q_ext_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule is an integer comparison (bounds cross-multiplied), so the
     doc-level verdicts are engine-exact: no float threshold can flip
     a document between Spark and the oracle."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = F.split("text", " ")
     sig = docs.select(
@@ -638,7 +632,6 @@ def q_ext_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     array functions run JVM-side), then a (lang x band)-bounded
     partial-aggregated rollup; zero joins, zero windows, one
     corpus-sized shuffle of 15 groups."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = F.split("text", " ")
     n_tok = F.size(words).cast("double")
@@ -734,7 +727,6 @@ def q_ext_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST into a range join.  No global per-row sort anywhere,
     which is what makes this form survive 100 TB where a
     percent_rank-over-everything plan serializes on one reducer."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 N_HASHES = 16
@@ -166,7 +166,6 @@ def q_ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on content hash, deterministic
     survivor (min doc_id).  One shuffle on an uniform key — the 100 TB
     plan is the same plan."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5("text").alias("content_hash"))
@@ -241,7 +240,6 @@ sig AS (
 )
 def q_ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash signature table itself (oracle-checked bit-for-bit)."""
-    prepare(spark)
     return minhash_signature(spark, sf_dir)
 
 
@@ -336,7 +334,6 @@ def q_ext_dedup_minhash_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the r12 forms — same integers, same oracle — but the
     16-way min aggregate sees exactly one row per (doc, shingle), the
     same cardinality as the unweighted signature."""
-    prepare(spark)
     return _idf_sig_from(_weighted_shingles(spark, sf_dir))
 
 
@@ -458,7 +455,6 @@ def q_ext_dedup_near_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     2x per invocation.  Candidate generation is the identical banded
     equi-join (no pair explosion); weighted doc sizes are one partial
     aggregate.  Cost class identical to q_ext_dedup_near."""
-    prepare(spark)
     wsh = _weighted_shingles(spark, sf_dir).transform(scoped_persist)
     sig = _idf_sig_from(wsh).transform(scoped_persist)
     cand = lsh_candidate_pairs(sig)
@@ -563,7 +559,6 @@ def q_ext_dedup_clusters_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph that is tiny relative to the corpus, labels localCheckpoint-
     truncated per round.  Cost class identical to q_ext_dedup_clusters;
     the oracle computes the same closure with a recursive CTE."""
-    prepare(spark)
     pairs = q_ext_dedup_near_idf(spark, sf_dir)
     return connected_components(pairs).select("doc_id", "cluster_id")
 
@@ -591,7 +586,6 @@ def q_ext_dedup_survivors_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the non-canonical label rows.  The anti-join probe is one shuffle
     on doc_id against a label set bounded by the near-dup pair graph —
     tiny relative to the corpus at 100 TB."""
-    prepare(spark)
     pairs = q_ext_dedup_near_idf(spark, sf_dir)
     labels = connected_components(pairs)
     dropped = labels.filter(F.col("doc_id") != F.col("cluster_id")).select(
@@ -645,7 +639,6 @@ def q_ext_minhash_idf_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     side touches only the one-row-per-doc weighted signature table.
     Like q_ext_dedup_near_idf, signature and verify sides share ONE
     persisted weighted-shingle pass (r13)."""
-    prepare(spark)
     wsh = _weighted_shingles(spark, sf_dir).transform(scoped_persist)
     sig = _idf_sig_from(wsh).transform(scoped_persist)
     cand = lsh_candidate_pairs(sig)
@@ -769,7 +762,6 @@ def q_ext_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup detection end-to-end: signatures -> banded
     bucket join -> exact-Jaccard verification of candidates only.
     The verify joins run on df-capped shingles (see SHINGLE_DF_CAP)."""
-    prepare(spark)
     # Both persisted tables are referenced from multiple join branches
     # (sig by both sides of the band self-join, the capped shingles by
     # both sides of the intersection join plus the size agg); without
@@ -862,7 +854,6 @@ def q_ext_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-row-per-doc signature table: candidates come from the
     banded self-join, the estimate from two signature lookups per pair;
     the shingle sets are never re-read."""
-    prepare(spark)
     sig = minhash_signature(spark, sf_dir).transform(scoped_persist)
     cand = lsh_candidate_pairs(sig)
     sa = sig.alias("sa")
@@ -904,7 +895,6 @@ def q_ext_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative (union-find / connected components) and not
     SQL-expressible; at scale the anti-join is one shuffle on doc_id
     against a pair set that is tiny relative to the corpus."""
-    prepare(spark)
     pairs = q_ext_dedup_near(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
@@ -1073,7 +1063,6 @@ def q_ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     component's minimum doc_id.  Iterative min-label propagation in
     Spark; the DuckDB oracle computes the same closure with a recursive
     CTE — one of the few places the oracle is recursive SQL."""
-    prepare(spark)
     pairs = q_ext_dedup_near(spark, sf_dir)
     return connected_components(pairs).select("doc_id", "cluster_id")
 
@@ -1140,7 +1129,6 @@ def q_ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAMMING_THRESHOLD+1 chunks) — same output as the brute-force pair
     scan (the DuckDB oracle), but the join is a hash join on a
     high-entropy key instead of an all-pairs nested loop."""
-    prepare(spark)
     # md5 computed ONCE per shingle; the projection boundary keeps the
     # multi-referenced alias materialized (CollapseProject retains
     # non-cheap multi-referenced aliases), so the two words are substring
@@ -1281,7 +1269,6 @@ def q_ext_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     This query exists as the brute-force ground truth that prices the
     LSH tiers (q_ext_dedup_near / _simhash / _containment recall is
     measured against it); at 100 TB run those, never this."""
-    prepare(spark)
     sh = capped_shingle_rows(shingle_rows(spark, sf_dir))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     sa = sh.alias("sa")
@@ -1351,7 +1338,6 @@ def q_ext_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ext_dedup_near (candidates only, never all pairs); estimated
     side touches only the one-row-per-doc signature table.  Both
     persisted tables feed multiple join branches."""
-    prepare(spark)
     # one persisted explode feeds sig + the capped table (r13; see
     # q_ext_dedup_near)
     sh_raw = shingle_rows(spark, sf_dir).transform(scoped_persist)
@@ -1444,7 +1430,6 @@ def q_ext_dedup_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     affordable after the banded prefilter prunes ~n^2/bands pairs, and
     never on all pairs).  Both engines implement unit-cost
     Levenshtein, so dist is integer-identical."""
-    prepare(spark)
     sig = minhash_signature(spark, sf_dir).transform(scoped_persist)
     cand = lsh_candidate_pairs(sig)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1542,7 +1527,6 @@ def q_ext_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     band key, pair-distinct, then the pair set joins the two signature
     rows back for the component-agreement estimate.  All joins are
     hash joins on high-entropy keys; nothing touches text again."""
-    prepare(spark)
     sig = minhash_signature(spark, sf_dir).transform(scoped_persist)
     results = None
     for bands, rows in BAND_SWEEP:
@@ -1639,7 +1623,6 @@ def q_ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded candidates -> df-capped shingle intersection), only the
     final scalar differs — at 100 TB the marginal cost of the second
     tier is one more filter over the same intersection table."""
-    prepare(spark)
     # one persisted explode feeds sig + the capped table (r13; see
     # q_ext_dedup_near)
     sh_raw = shingle_rows(spark, sf_dir).transform(scoped_persist)
@@ -1724,7 +1707,6 @@ def q_ext_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of history size once the hash table exists, which is
     the whole point of incremental dedup at 100 TB: the corpus-scale
     job ran once, every later crawl pays only its own size."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     hist = (
         docs.filter(F.col("doc_id") % INC_MOD != 0)
@@ -1769,7 +1751,6 @@ def q_ext_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: two stacked partial-aggregated groupBys (content hash, then
     size), both map-side combined on uniform keys; output is bounded by
     the distinct cluster sizes, a handful of rows at any corpus."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     clusters = docs.groupBy(F.md5("text").alias("h")).agg(
         F.count("*").alias("cluster_size")
@@ -1811,7 +1792,6 @@ def q_ext_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-cluster costs k rows, never a join back — the hapax/dupspan
     shape), then a sources-bounded rollup.  Two uniform-key shuffles
     total."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1858,7 +1838,6 @@ def q_ext_dedup_roi(spark: SparkSession, sf_dir: str) -> DataFrame:
     a partial-aggregated min per hash that joins back on the same
     hash key (one shuffle each side, co-partitioned); 1-row rollup.
     Savings ratio is one IEEE division of exact integer sums."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id",
@@ -1963,7 +1942,6 @@ def q_ext_dedup_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and tied timestamps cannot flip keeps.  The gap
     check is integer seconds (the q_ext_sessionize epoch
     discipline)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     sec = F.unix_timestamp("ts")
     seq = ev.groupBy("user_id", "event_type").agg(

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 META_SCHEMA = (
@@ -426,7 +425,6 @@ def q_ext_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependency-free parser; everything else gets the md5-derived
     deterministic fake — the text corpus exercises only the fake
     branch, which is what the oracle reproduces."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     blobs = docs.select(
         "doc_id", F.col("text").cast("binary").alias("blob")
@@ -451,7 +449,6 @@ def q_ext_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling plumbing: explode each blob into fixed-size frame
     windows (offset plan only — the decode of each frame is the stubbed
     kernel).  posexplode keeps this a map-only plan."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_frames = F.ceil(F.length("text") / 256.0).cast("long")
     return (
@@ -522,7 +519,6 @@ def q_ext_multimodal_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ext_multimodal_frames), md5 per chunk in JVM codegen, one
     partial-agged shuffle on the uniform chunk hash, then a 1-row
     rollup."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_frames = F.ceil(F.length("text") / float(CHUNK_BYTES)).cast("long")
     chunks = docs.select(
@@ -654,7 +650,6 @@ def q_ext_multimodal_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all.  At 100 TB decode parallelism is partition count
     x Arrow batch size, and memory is bounded by maxPartitionBytes
     (blobs stream through the kernel batch by batch)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     blobs = docs.select(
         "doc_id", F.col("text").cast("binary").alias("blob")

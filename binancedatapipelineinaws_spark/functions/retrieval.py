@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 BM25_QUERY = ("spark", "query", "join")  # seed terms scored against docs
@@ -116,7 +116,6 @@ def q_ext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     lengths + term stream) read the same cached scan at test scale and
     column-pruned parquet at cluster scale — both passes are map-only
     until the query-bounded aggregate."""
-    prepare(spark)
     return bm25_components(spark, sf_dir).groupBy("doc_id").agg(
         F.count("*").alias("n_matched"),
         F.round(F.sum("term_score"), 6).alias("bm25"),
@@ -164,7 +163,6 @@ def q_ext_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc average.  The model is exactly the full-corpus MLE the
     oracle computes; the corpus is scanned twice map-only (LM build,
     scoring), never cached."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     bg = bigram_rows(docs.select("doc_id", "text"))
     lm = bigram_lm(bg)
@@ -271,7 +269,6 @@ def q_ext_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division, so the result is shuffle-order independent.
     Docs with <2 words carry no bigrams and are excluded, as in
     the scorer."""
-    prepare(spark)
     scores = q_ext_bigram_lm_score(spark, sf_dir).select(
         "doc_id", F.col("avg_logp").alias("s")
     )
@@ -399,7 +396,6 @@ def q_ext_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the candidate sets are engine-portable."""
     from binancedatapipelineinaws_spark.functions.similarity import dot, norm
 
-    prepare(spark)
     bm = bm25_components(spark, sf_dir).groupBy("doc_id").agg(
         # 9-dp round before ranking — see the oracle's bm9 comment
         F.round(F.sum("term_score"), 9).alias("bm25")

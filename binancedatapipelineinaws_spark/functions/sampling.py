@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.functions.dedup import duck_hex32, hex32
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 # per-language sampling rates in basis points (how a curation pipeline
@@ -52,7 +52,6 @@ def q_ext_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no state), stable under re-runs and repartitioning, and
     exactly reproducible in any engine — the property `df.sample()`
     cannot give a multi-engine pipeline."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     rate = F.when(F.col("lang") == "en", F.lit(SAMPLE_RATES_BP["en"])).when(
         F.col("lang") == "de", F.lit(SAMPLE_RATES_BP["de"])
@@ -94,7 +93,6 @@ def q_ext_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     split across shards, so no single task ever owns a whole language's
     running sum — the difference between a window that works at 100 TB
     and one that serializes terabytes through one partition."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "words", F.split("text", " ")
     )
@@ -170,7 +168,6 @@ def q_ext_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     A trainer reading shard s materializes sequence k by slicing the
     docs with start_seq <= k <= start_seq + n_seqs_spanned - 1; the
     plan is one sharded window (no global order, no driver state)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         # long: match DuckDB len()'s BIGINT in the driver's pandas hash
@@ -227,7 +224,6 @@ def q_ext_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight-scaled threshold explicitly before the integer cast (DuckDB
     CAST rounds doubles where Spark truncates), keeping the accept
     boundary exact."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     stats = docs.agg(F.avg("n_chars").alias("avg_chars"))
     keep_bp = F.least(
@@ -301,7 +297,6 @@ def q_ext_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only md5-threshold filter.  The corpus-sized stage has no
     shuffle and the accept test is reproducible across engines,
     partitionings, and reruns."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     lang_stats = docs.groupBy("lang").agg(F.count("*").alias("n_docs"))
     w_all = Window.partitionBy()
@@ -364,7 +359,6 @@ def q_ext_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     join.  Parity: the weight is one IEEE division of exact integers,
     rounded to 9 dp BEFORE the floor (the q_ext_temperature_resample
     ulp discipline), and the cap is an integer least()."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     per_src = docs.groupBy("source").agg(
         F.sum(F.size(F.split("text", " "))).alias("src_tokens")
@@ -421,7 +415,6 @@ def q_ext_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — a parallel partial top-k per partition
     merged on the driver side; NO global sort, no whole-corpus
     shuffle, the q_ext_zipf_slope discipline."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     key = hex32(F.concat(F.lit("bk:"), F.col("doc_id").cast("string")))
     return (
@@ -463,7 +456,6 @@ def q_ext_groupk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratum-bounded — for mega-strata the q_ext_token_budget shard
     trick applies (hash-shard inside the language, take k from the
     shard-proportional budget)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     key = hex32(F.concat(F.lit("gk:"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("lang").orderBy("sort_key", "doc_id")
@@ -523,7 +515,6 @@ def q_ext_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window with WindowGroupLimit pruning to k rows per stratum before
     the sort network — identical shape (and scale story) to
     q_ext_groupk_sample."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     u = (
         hex32(F.concat(F.lit("ws:"), F.col("doc_id").cast("string"))) + 1

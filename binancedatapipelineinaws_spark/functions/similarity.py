@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 DIM = 64
@@ -83,7 +83,6 @@ def q_ext_cosine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, per-partition scoring, windowed top-k.  Norms are
     precomputed once per vector (a map-side projection), not per pair —
     at n_query queries that's 2*n_query-fold less fold work."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     q = F.broadcast(
         emb.filter(F.col("vec_id") < N_QUERY).select(
@@ -193,7 +192,6 @@ FROM ranked WHERE rank <= {TOP_K}
 def q_ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH: bucket once (map-only), compare
     only same-bucket pairs, exact-cosine rerank of the candidates."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     bucketed = emb.select(
         "vec_id",
@@ -267,7 +265,6 @@ def q_ext_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe set is a map-side explode of the QUERY side only (corpus rows
     stay single-bucket), and each (query, candidate) pair matches at
     most one probe, so the equi-join needs no dedup."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     bucketed = emb.select(
         "vec_id",
@@ -376,7 +373,6 @@ def q_ext_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multi-probe variant (q_ext_ann_multiprobe) or IVF on
     structure-less data, as a number inside the correctness gate rather
     than a surprise in production."""
-    prepare(spark)
     # persisted (r13, guide §2.4): the semi-join numerator AND the
     # denominator aggregate both read exact_k; unpersisted, each
     # consumer re-ran the full brute-force scoring pass (n_query x k
@@ -601,7 +597,6 @@ def q_ext_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction (a missed pair, not a wrong value).
     tools/check_oracle.py knows this bound and SKIPs with a notice
     instead of reporting a false FAIL."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # footer-only count of the raw scan picks the band geometry
     return embed_neardup_pairs(emb, n_vectors=emb.count())
@@ -777,7 +772,6 @@ def q_ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: nearest-centroid cell assignment (nprobe=1, the shared
     `assign_cells` coarse quantizer), exact cosine rerank within the
     cell."""
-    prepare(spark)
     assigned = assign_cells(spark, sf_dir)
     q = assigned.filter(F.col("vec_id") < N_QUERY).select(
         F.col("vec_id").alias("query_id"),
@@ -905,7 +899,6 @@ def q_ext_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     join -> map-only quantize.  Both engines fold float32 inputs to
     double before the identical (x-mn)/(mx-mn)*LEVELS floor, so the
     integer codes are exact."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return quantized_codes(emb).select(
         "vec_id",
@@ -1145,7 +1138,6 @@ def q_ext_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies large corpora against precomputed exact fixtures because
     the DUCKDB side's n^2 join is what stops scaling, not this
     plan."""
-    prepare(spark)
     cells = assign_cells(spark, sf_dir)
     # one representative per distinct (cell, vector); persisted: the
     # rep self-join below would otherwise re-run the grouping twice
@@ -1341,7 +1333,6 @@ def q_ext_embed_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     make mean/std bit-identical across engines and partial-agg
     schedules; the E[x^2]-E[x]^2 cancellation is guarded by greatest(0)
     in both engines."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     ex = emb.select(F.posexplode("embedding").alias("d", "v_raw")).select(
         "d",
@@ -1410,7 +1401,6 @@ def q_ext_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global centroid is the dims-bounded rollup of the same cells,
     broadcast back; everything after the first aggregate is bounded by
     labels x dims, independent of corpus size."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     ex = emb.select(
         "label", F.posexplode("embedding").alias("d", "v_raw")
@@ -1494,7 +1484,6 @@ def q_ext_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/std are partial-agg-schedule independent; the 1-row stats
     table attaches by broadcast — corpus-sized work is one projection
     + one combinable aggregate."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     qcomp = F.transform(
         F.col("embedding"),
@@ -1572,7 +1561,6 @@ def q_ext_cosine_calib(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 9 dp before binning so the bin edge cannot flip between
     engines); output is bins-bounded with a share window over the tiny
     histogram."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     sample = emb.filter(F.col("vec_id") < CALIB_SAMPLE).select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
@@ -1646,7 +1634,6 @@ def q_ext_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the q_ext_cosine_knn shape with the label added to the join
     condition: broadcast queries, per-partition scoring of only
     same-label candidates, windowed top-k per query."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     q = F.broadcast(
         emb.filter(F.col("vec_id") < N_QUERY).select(
@@ -1781,7 +1768,6 @@ def q_ext_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-partition exactness bound: |qv| <= {COV_SCALE}/2, so a partition
     of r rows sums to < r * {COV_SCALE}^2 / 4 — int64-safe to ~10^8 rows
     per partition, 100x above a 128 MB split."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     partials = emb.select("embedding").mapInPandas(
         gram_partials, schema=GRAM_PARTIALS_SCHEMA
@@ -1954,7 +1940,6 @@ def q_ext_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     by-construction failure.  Both engines still COMPUTE identical
     per-query recalls there; the quantizer stays value-checked at
     every scale via q_ext_ann_nprobe's relative pins."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # persisted: queries and corpus both read it, as in q_ext_semdedup
     cells = assign_cells(spark, sf_dir, persist=True)
@@ -2142,7 +2127,6 @@ def q_ext_ann_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates ride the cell equi-join; both probe levels rank the
     same scored frame.  The exact baseline reuses q_ext_cosine_knn's
     registered plan."""
-    prepare(spark)
     cells = assign_cells(spark, sf_dir, persist=True)
     emb = load_table(spark, sf_dir, "embeddings")
     cents = F.broadcast(

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -57,7 +57,6 @@ FROM w
 def q_ext_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-scoring features: lengths, type-token ratio, stopword
     ratio, and a composite quality gate."""
-    prepare(spark)
     # projection boundary: split once per row — every downstream column
     # reuses the materialized array instead of re-splitting the text
     docs = load_table(spark, sf_dir, "documents").withColumn(
@@ -119,7 +118,6 @@ FROM scored
 def q_ext_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID (argmax over per-language scores with a
     deterministic preference order)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = F.split("text", " ")
     scores = {
@@ -188,7 +186,6 @@ def q_ext_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals-join would re-execute the corpus aggregate per branch)."""
     from pyspark.sql import Window
 
-    prepare(spark)
     pred = q_ext_lang_id(spark, sf_dir).select(
         "declared_lang", "predicted_lang"
     )
@@ -220,7 +217,6 @@ FROM documents
 def q_ext_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens, regex (BPE-ish pre-tokenizer)
     tokens, and the bytes/4 LLM heuristic."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -249,7 +245,6 @@ def q_ext_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polynomial rolling-hash document fingerprint
     (acc*31 + charcode mod 1e9+7) — order-sensitive, unlike the md5
     content hash, so it supports windowed/winnowed chunk comparison."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     codes = F.transform(F.split("text", ""), lambda c: F.ascii(c).cast("long"))
     fp = F.aggregate(
@@ -350,7 +345,6 @@ def q_ext_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     > 1000 docs is boilerplate, not chunk overlap)."""
     from binancedatapipelineinaws_spark.functions.dedup import SHINGLE_DF_CAP
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     sk = winnow_sketch(docs)
     hot = (
@@ -414,7 +408,6 @@ def q_ext_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the cross-engine float guard (same discipline as cosine)."""
     from pyspark.sql import Window
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     # tf persisted (r13, guide §2.4): the df broadcast build AND the
     # scored probe side both read it — unpersisted, the corpus explode
@@ -476,7 +469,6 @@ def q_ext_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row, col) cell key — a {CMS_D * CMS_W}-cell mergeable sketch
     whatever the corpus size, the same shape HLL/quantile sketches use
     (and the streaming-compatible one: cells merge by addition)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split("text", " ")).alias("term"))
     rows = words.select(
@@ -540,7 +532,6 @@ def q_ext_cms_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, so the estimate join is a broadcast: exact counts explode
     x{CMS_D} to their cell coordinates (map-only), the cell lookup is
     map-side, and min-over-rows is a vocabulary-sized aggregate."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     from binancedatapipelineinaws_spark.functions.dedup import hex32
 
@@ -636,7 +627,6 @@ def q_ext_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     The rank window that follows runs over the N-row result — bounded
     by the constant, not the corpus — then one component-sum aggregate
     -> scalar OLS algebra (same 2^53-guarded shape as q_ext_trend)."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -705,7 +695,6 @@ def q_ext_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (source, lang)-bounded aggregate, share windows over that
     tiny cells table, an entropy rollup to one row per source.  Single
     corpus scan; every post-scan stage is bounded by sources x langs."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -772,7 +761,6 @@ def q_ext_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_n come from a plain partial-aggregated one-row aggregate
     broadcast back onto the k-grid.  No corpus-growing window remains.
     """
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -839,7 +827,6 @@ def q_ext_len_bands_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     `approx_percentile` (mergeable sketch, same plan shape) at 100 TB,
     keeping this exact form as the oracle (the q_ext_mad_outliers
     discipline)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -883,7 +870,6 @@ def q_ext_hapax_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: token explode -> ONE term-partitioned count window -> per-doc
     rollup, the single-pass dupspan shape: a term in k docs costs k
     rows, never a join back."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -948,7 +934,6 @@ def q_ext_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the token stream (map-only flag, no shuffle of the corpus)
     -> two bounded rollups.  Ties at the K boundary break on
     (count desc, term) identically in both engines."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("term")
@@ -1001,7 +986,6 @@ def q_ext_token_len_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: map-only explode + length projection -> one
     partial-aggregated count over the tiny length domain; the share
     window runs over that bounded histogram."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1048,7 +1032,6 @@ def q_ext_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final aggregate to the languages-bounded output.  The
     ratio is a single IEEE division of exact integer sums — parity by
     construction (the q_ext_mix_weights discipline)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     sig = docs.select(
         "lang",
@@ -1096,7 +1079,6 @@ def q_ext_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines evaluate ln at the same integer points, and the 6-dp round
     guards the sub-ulp libm-vs-JVM tail (the q_ext_zipf_slope
     precedent)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(
@@ -1175,7 +1157,6 @@ def q_ext_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     all; the band CASE re-derives from the same double tree in both
     engines so a boundary can't flip.  100 TB: embarrassingly
     parallel, cost is the regexp passes."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = F.size(F.split("text", " ")).cast("long")
     sentences = F.greatest(
@@ -1246,7 +1227,6 @@ def q_ext_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     table.  Ties at the cutoff are totally ordered (count desc, a, b)
     so the top-{BPE_TOP_PAIRS} is engine-independent.  All counts are
     integer-exact (no float anywhere)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
@@ -1342,7 +1322,6 @@ def q_ext_bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((alphabet+1)^2 keys).  Counts integer-exact throughout.
     Reference has no tokenizer tier (SURVEY §2, training-data
     extension)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
@@ -1572,7 +1551,6 @@ def q_ext_bpe_train_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-bounded (5 pair aggregates + 5 one-row broadcasts).
     Counts integer-exact throughout; output expansion of markers to
     character strings happens on the 1-row states only."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     wc = (
         docs.select(
@@ -1644,7 +1622,6 @@ def q_ext_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator is summed in DECIMAL (DuckDB side is HUGEINT) and cut
     to the 1e-6 grid by integer floor division, so the curve is
     bit-identical across engines."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     wc = (
         docs.select(
@@ -1731,7 +1708,6 @@ def q_ext_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact.  At 100 TB the pair table is vocabulary-bounded
     (|V|^2 worst case, Zipf-concentrated in practice), so the
     marginal/total broadcasts stay dim-sized no matter the corpus."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = docs.select(F.split("text", " ").alias("words")).filter(
         F.size("words") >= 2

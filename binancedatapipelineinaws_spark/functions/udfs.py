@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 
@@ -33,7 +32,6 @@ FROM lineitem WHERE l_orderkey % 50 = 0
 def q_ext_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized scalar Pandas UDF (Arrow batches, numpy kernels) —
     the sanctioned slow path when an expression needs Python math."""
-    prepare(spark)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -72,7 +70,6 @@ def q_ext_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization (the per-group normalization pattern from SURVEY
     §2.9).  Each group arrives as one pandas DataFrame; the shuffle is
     the same hash partitioning a built-in window would use."""
-    prepare(spark)
 
     def make_kernel():
         def zscore(pdf):
@@ -104,7 +101,6 @@ def q_ext_udtf_explode_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (table function): one input row -> N tag rows.  The
     built-in explode() covers most of this space (and is what the other
     queries use); the UDTF exists to exercise the extension point."""
-    prepare(spark)
     from pyspark.sql.functions import udtf
 
     # Arrow-batched: the exchange with the Python worker is columnar
@@ -117,11 +113,11 @@ def q_ext_udtf_explode_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("tag_exploder", TagExploder)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0)
-    o.createOrReplaceTempView("udtf_orders_input")
     return spark.sql(
         """
         SELECT t.o_orderkey, t.tag
-        FROM udtf_orders_input,
+        FROM {orders},
              LATERAL tag_exploder(o_orderkey, o_orderstatus, o_orderpriority) t
-        """
+        """,
+        orders=o,
     )

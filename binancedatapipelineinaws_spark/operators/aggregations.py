@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from binancedatapipelineinaws_spark.canonical import BTCUSDT_CTE, btcusdt
 from binancedatapipelineinaws_spark.operators._util import dec, dec_avg, dec_sum
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 
@@ -29,7 +28,6 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 """,
 )
 def q_agg_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n_rows"),
@@ -51,7 +49,6 @@ FROM lineitem GROUP BY l_returnflag
 """,
 )
 def q_agg_sum_avg_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.sum("l_quantity").alias("sum_qty"),  # integer-valued: exact in double
@@ -113,7 +110,6 @@ def q_agg_ohlcv_1min(spark: SparkSession, sf_dir: str) -> DataFrame:
     (time, bid) — trade id disambiguates trades in the same second,
     mirroring the TSV line order of the reference writer (main.py:61-67).
     """
-    prepare(spark)
     return _candles(btcusdt(spark, sf_dir))
 
 
@@ -167,7 +163,6 @@ def q_agg_ohlcv_rollup_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     one did — re-aggregating candles instead of rescanning raw trades
     is what makes multi-granularity candle serving viable at 100 TB of
     ticks (and the rollup stays correct because OHLCV is mergeable)."""
-    prepare(spark)
     one_min = q_agg_ohlcv_1min(spark, sf_dir)
     bucket = (
         (F.unix_timestamp("minute_start").cast("long") / 300).cast("long")
@@ -199,7 +194,6 @@ FROM orders GROUP BY o_orderpriority
 """,
 )
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -252,7 +246,6 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 2.94 s fused vs 0.97 s split (r8).  Split, the approx
     pass keeps one sketch per group (3) and the exact pass is a plain
     Expand distinct with no sketch state."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     exact = li.groupBy("l_returnflag").agg(
         F.count_distinct("l_partkey").alias("exact_parts"),
@@ -296,7 +289,6 @@ FROM btcusdt GROUP BY 1, 2
 """,
 )
 def q_agg_groupby_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     df = btcusdt(spark, sf_dir)
     return df.groupBy(
         "maker", F.date_trunc("hour", "time").alias("hour_start")
@@ -317,7 +309,6 @@ HAVING count(*) > 15
 """,
 )
 def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
@@ -340,7 +331,6 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """,
 )
 def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n_rows"),
@@ -359,7 +349,6 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 """,
 )
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n_rows")
@@ -406,7 +395,6 @@ def q_agg_stddev_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     Singleton groups (n=1) report NULL for BOTH std and var — sample
     moments are undefined there, and the unguarded form emitted
     std=0.0 with var=NULL (ADVICE.md r7)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("long")
     agg = li.groupBy("l_returnflag").agg(
@@ -460,7 +448,6 @@ def q_agg_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (merge iff gap < 6 h; end = last ts + gap) with
     gaps-and-islands SQL.  One shuffle on the grouping key; session
     merging is per-key and streaming-state compatible."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "6 hours").alias("w"))
@@ -513,7 +500,6 @@ def q_ext_ohlcv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MERGE SEMANTICS: touched-minute replacement (including the
     straddled partial candle) reproduces the full recompute
     hash-exactly."""
-    prepare(spark)
     df = btcusdt(spark, sf_dir)
     bound = df.agg(F.max("time").alias("mx"))
     flagged = df.crossJoin(F.broadcast(bound)).withColumn(

@@ -15,7 +15,7 @@ from binancedatapipelineinaws_spark.operators.graph import (
     order_baskets,
 )
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 FUNNEL_STEPS = ("view", "click", "purchase")
@@ -57,7 +57,6 @@ def q_ext_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     slower at sf0.1; per-task state here is one user's funnel events
     (the per-user-window bound, same as q_ext_ewma).  `F.get` (not
     element_at) keeps empty-filter results NULL under ANSI mode."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     seq = (
         ev.filter(F.col("event_type").isin(*FUNNEL_STEPS))
@@ -137,7 +136,6 @@ def q_ext_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, a user-keyed join, then a tiny (cohort, week) rollup;
     the (week x week) output is bounded by the calendar, not the data,
     so the final join is broadcast at any scale."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
@@ -217,7 +215,6 @@ def q_ext_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     round, so a hot key costs O({EWMA_TAIL}) instead of its history.
     Both engines truncate and fold the identically-ordered list, so
     the doubles agree bit-for-bit."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.transform(
@@ -284,7 +281,6 @@ def q_ext_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (map-side combined, #types^2-bounded output), and the
     row normalization runs as a window over the TINY pair table — the
     same no-totals-join discipline as q_ext_lang_confusion."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -331,7 +327,6 @@ def q_ext_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined) and the 1-row horizon, broadcast back — the comparison
     is then map-only.  Timestamp arithmetic stays in the timestamp
     domain in both engines (no epoch doubles)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     lasts = ev.groupBy("user_id").agg(
         F.max("ts").alias("last_ts"), F.count("*").alias("n_events")
@@ -383,7 +378,6 @@ def q_ext_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the explode.  At 100 TB the exploded stream is users x days x
     {ACTIVE_WINDOW_DAYS} — linear, uniform keys; swap countDistinct
     for approx_count_distinct (mergeable HLL) for the sketch path."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     du = (
         ev.select(F.col("ts").cast("date").alias("day"), "user_id")
@@ -431,7 +425,6 @@ def winsorize_frame(
     partial-aggregated map-side) over event_type, broadcast-joined
     back — no whole-partition window anywhere, rank error bounded by
     1/{PCTL_ACCURACY}."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     if exact:
         b = ev.selectExpr(
@@ -541,7 +534,6 @@ def q_ext_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate); the self-join is keyed on user_id (uniform) and each
     user contributes at most types^2 pairs, so the join output is
     users x types^2-bounded, never event-count-bounded."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     du = ev.select("event_type", "user_id").distinct().transform(scoped_persist)
     sizes = du.groupBy("event_type").agg(F.count("*").alias("n"))
@@ -624,7 +616,6 @@ def q_ext_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id); tied timestamps cannot flip sessions between
     engines.  At 100 TB users hash uniformly across tasks and no
     global sort exists."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_s = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -682,7 +673,6 @@ def q_ext_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the histogram, whose row count is bounded by max
     events-per-user (a small, corpus-growth-insensitive domain), not
     by users.  Integer products stay exact below 2^53."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count("*").alias("c"))
     hist = per_user.groupBy("c").agg(F.count("*").alias("m"))
@@ -749,7 +739,6 @@ def q_ext_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: ONE partial-aggregated per-customer pass; the corpus
     frontier is a 1-row aggregate attached by broadcast."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     frontier = o.agg(F.max(F.to_date("o_orderdate")).alias("mx"))
     per = o.groupBy("o_custkey").agg(
@@ -805,7 +794,6 @@ def q_ext_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boundary count contributes (k - users_above) * c.  Windows run
     over the histogram (bounded by max events-per-user), never over
     users."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     per = ev.groupBy("user_id").agg(F.count("*").alias("c"))
     hist = per.groupBy("c").agg(F.count("*").alias("m"))
@@ -884,7 +872,6 @@ def q_ext_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: two stacked partial-aggregated groupBys ((user, day) then
     user) — no window, no join; both shuffles are on uniform keys."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
         F.count("*").alias("n")
@@ -935,7 +922,6 @@ def q_ext_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one (7 x types)-bounded aggregate; the share window runs
     over that tiny cells table."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     cell = ev.groupBy(
         (F.weekday("ts") + F.lit(1)).cast("long").alias("dow"),
@@ -998,7 +984,6 @@ def q_ext_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((user, session) then user).  One window exchange + two combinable
     shuffles; per-task state is one user's rows, as in every per-user
     window."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_s = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -1071,7 +1056,6 @@ def q_ext_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     output.  Gaps are floored-epoch integer seconds and the bands are
     integer CASE edges: zero float thresholds, zero log() calls, so
     both engines band every gap identically."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         "ts", "event_id"
@@ -1126,7 +1110,6 @@ def q_ext_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization); the HAVING prunes before any output
     materializes; `a < b` halves the pair space and fixes a canonical
     orientation."""
-    prepare(spark)
     return (
         basket_pairs(order_baskets(spark, sf_dir))
         .groupBy("part_a", "part_b")
@@ -1180,7 +1163,6 @@ def q_ext_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     is dictionary-sized) and the basket total attaches as a 1-row
     broadcast.  Every ratio is one IEEE division of exact integer
     counts."""
-    prepare(spark)
     baskets = order_baskets(spark, sf_dir).transform(scoped_persist)
     n = baskets.agg(F.count("*").alias("n_baskets"))
     item = (
@@ -1253,7 +1235,6 @@ def q_ext_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     between engines) carrying last(channel, ignorenulls) over the
     preceding frame, then a channels-bounded rollup of just the
     purchase rows.  No self-join, no per-channel pass."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -1299,7 +1280,6 @@ def q_ext_repeat_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: orders partial-aggregates to (custkey, count) first, the
     customer dim attaches its segment by broadcast, and the rollup is
     segments-bounded.  The >= 2 threshold is an integer compare."""
-    prepare(spark)
     per_cust = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -1353,7 +1333,6 @@ def q_ext_first_event_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     task retains only its first row per user before the filter — then
     a types-bounded rollup; the share normalizes via a window over
     the tiny rollup, so the corpus is never re-read for the total."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     firsts = (
@@ -1430,7 +1409,6 @@ def q_ext_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     27-segment-bounded rollup.  Fixed thresholds (vs ntile) keep the
     plan free of any global rank window; monetary sums are exact
     decimal so threshold compares are engine-exact."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     anchor = F.broadcast(orders.agg(F.max("o_orderdate").alias("t0")))
     per = (
@@ -1528,7 +1506,6 @@ def q_ext_topk_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sees the full distinct-user table.  At 100 TB the counts table is
     |users| rows (corpus-independent) and the limit pushdown keeps the
     final shuffle at O(shards * k)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy(
         (F.col("user_id") % HH_SHARDS).alias("shard"),
@@ -1606,7 +1583,6 @@ def q_ext_survival_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny suffix-sum window.  At 100 TB every corpus-sized stage is
     key-partitioned aggregation; only the day-bucket table (a few
     hundred rows for a year) hits a window."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     bounds = F.broadcast(ev.agg(F.max("ts").alias("obs_end")))
     signup = (
@@ -1731,7 +1707,6 @@ def q_ext_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     second field sees the first field's new value — probed in r8), so
     only the CTE's snapshot SELECT matches Spark's aggregate()
     semantics."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.transform(
@@ -1862,7 +1837,6 @@ def q_ext_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     support aggregate whose cardinality is bounded by the (capped)
     path domain, then TakeOrdered top-k.  Path strings join on
     content, so hot paths partial-aggregate map-side."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_s = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))

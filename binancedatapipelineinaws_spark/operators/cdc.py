@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 UPSERT_EVERY = 10  # every 10th order gets a correction record
@@ -58,7 +57,6 @@ def q_ext_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether the batch touches 0.1% or 100% of keys.  Keys only in the
     batch would insert, keys only in base survive — semantics a
     base-vs-updates join cannot give in one pass."""
-    prepare(spark)
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -130,7 +128,6 @@ def q_ext_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the row comparison as scalar expressions; the rollup output
     is 4 rows at any scale.  Versus content-hash approaches: comparing
     named columns keeps the diff schema-evolution-safe."""
-    prepare(spark)
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -211,7 +208,6 @@ def q_ext_join_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers, not the view size.  The dimension join broadcasts
     customer attributes once.  Exact decimal revenue sums make merge
     == recompute bit-identical at any scale."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
@@ -298,7 +294,6 @@ def q_ext_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     total so run boundaries are engine-independent.  100 TB: uniform
     user keys, span table is change-bounded (distinct runs), never
     event-bounded."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("event_type").over(w)
@@ -394,7 +389,6 @@ def q_ext_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     source side is a tiny CDC batch anyway), then ONE co-keyed full
     outer join — everything shuffles once on user_id.  No window over
     the corpus, no driver round-trip."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100, 0).cast("long")
     cutoff = F.lit(MERGE_CUTOFF).cast("timestamp")

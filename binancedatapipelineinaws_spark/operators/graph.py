@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 PR_SCALE = 1_000_000_000_000  # rank fixed-point: 1e-12 resolution
@@ -365,7 +365,6 @@ def q_ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration count is a constant, so the plan is a fixed pipeline of
     {PR_ITERS} joins Catalyst schedules like any other — the Pregel
     message pass without leaving the DataFrame API."""
-    prepare(spark)
     und = _copurchase_und(spark, sf_dir)
     edges = und.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
@@ -391,7 +390,6 @@ def q_ext_pagerank_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is one row_number window on the src key the degree count
     shuffles on anyway.  The uncapped id keeps the pinned PR_MINSUP
     spec; this id registers the scale knob with its own oracle."""
-    prepare(spark)
     return _pagerank_on(_copurchase_edges_capped(spark, sf_dir))
 
 
@@ -525,7 +523,6 @@ def q_ext_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair (an OR-of-orientations condition here would plan as a
     nested-loop join — the canonical order makes it hash-joinable)
     -> three 1-row aggregates crossJoined into one output row."""
-    prepare(spark)
     und = _copurchase_und(spark, sf_dir)
     edges = und.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
@@ -551,7 +548,6 @@ def q_ext_triangles_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparsified similarity graph keeps).
     Same degree-ordered orientation + single closing equi-join as the
     uncapped id."""
-    prepare(spark)
     return _triangle_stats_on(
         _copurchase_edges_capped(spark, sf_dir, persist=True)
     )
@@ -616,7 +612,6 @@ def q_ext_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     for broadcast once it fits, and AQE makes that call at runtime.
     Reference: no graph surface (start_all_pipeline.py:463-464 single
     table) — engine superset, same family as q_ext_pagerank."""
-    prepare(spark)
     und = _copurchase_und(spark, sf_dir)
     edges = und.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")

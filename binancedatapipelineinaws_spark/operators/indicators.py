@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.canonical import BTCUSDT_CTE, btcusdt
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 
 # ---------------------------------------------------------------------------
 # shared integer-scaled candle layer
@@ -176,7 +176,6 @@ def q_ext_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm-up edge keeps the conventional growing frame (band over however
     many rows exist), with n reported so consumers can mask; n=1 rows
     (undefined sample stddev) are dropped in both engines."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     fr = (
         Window.partitionBy("day")
@@ -243,7 +242,6 @@ def q_ext_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer breakout flags.  Pure integer min/max/compare — exact at
     any scale; the only doubles are the final /100 display divisions,
     the identical expression in both engines."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     fr = Window.partitionBy("day").orderBy("m").rowsBetween(-DON_N, -1)
     n_prior = F.count("*").over(fr)
@@ -307,7 +305,6 @@ def q_ext_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-5-unit volumes — order-independent — and the display double is
     one deterministic division (+0.0 canonicalizes the signed zero a
     negative-then-flat day can produce)."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     dw = Window.partitionBy("day").orderBy("m")
     prev = F.lag("close_c").over(dw)
@@ -372,7 +369,6 @@ def q_ext_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-sum mean.  The Wilder-recurrence form is q_ext_rsi's
     machinery; the SMA form is the window-exact variant that
     parallelizes as a plain frame."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     dw = Window.partitionBy("day").orderBy("m")
     prev = F.lag("close_c").over(dw)
@@ -447,7 +443,6 @@ def q_ext_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as an explicit lag sum — three doubles added in a fixed
     expression order, immune to the engine-ordered window-sum
     divergence the sf1 drill caught on double frames."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     fr = (
         Window.partitionBy("day")
@@ -665,7 +660,6 @@ def q_ext_parabolic_sar(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-away-from-zero on the 6-dp dollar grid.  Overflow: 50 x sar
     caps at ~$2M prices.  100 TB: O(1) state per day, (days x 1440)
     fold work — the q_ext_macd shape."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     bars = _day_arrays(
         c,
@@ -835,7 +829,6 @@ def q_ext_supertrend(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizes half-away-from-zero on the 6-dp dollar grid.  Overflow:
     the 6xATR band term caps at ~$1.5M prices.  100 TB: O(1) state
     per day, (days x 1440) fold work — the q_ext_macd shape."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     bars = _day_arrays(
         c,
@@ -969,7 +962,6 @@ def q_ext_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     headroom: 19 x tp3 x 1e9 caps at ~$1M prices.  100 TB: O(1) state
     per day, (days x 1440) fold work regardless of tick volume — the
     q_ext_macd shape."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     bars = _day_arrays(
         c,
@@ -1051,7 +1043,6 @@ def q_ext_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     lags, and the lead share the single day exchange.  100 TB: the
     q_ext_bollinger shape — (days x 1440) frame work on the
     calendar-bounded candle layer, parallel across days."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
 
     def mid2(n: int):
@@ -1145,7 +1136,6 @@ def q_ext_chaikin_ad(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-partitioned running-sum window — (days x 1440) work
     regardless of tick volume; at institutional volumes mfv_q swaps
     to DECIMAL(38,0) like q_ext_mfi, same plan."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     rng = F.col("high_c") - F.col("low_c")
     clv_q6 = F.when(rng == 0, F.lit(0).cast("long")).otherwise(
@@ -1240,7 +1230,6 @@ def q_ext_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits at any real volume.  100 TB: one day-partitioned frame
     over the calendar-bounded candle layer — (days x 1440) work
     regardless of tick volume, the q_ext_bollinger shape."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     dw = Window.partitionBy("day").orderBy("m")
     tp3 = F.col("high_c") + F.col("low_c") + F.col("close_c")
@@ -1426,7 +1415,6 @@ def q_ext_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized half-up to 5 dp on the integer grid; NULL on an all-flat
     history.  Emits one row per bar from bar 15 on.  Fixed-point
     headroom and the 100 TB shape are in the block comment above."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     bars = _day_arrays(c, [("xs", "close_c"), ("ms", "m")])
     elig = bars.filter(F.size("xs") >= RSI_N + 1)
@@ -1526,7 +1514,6 @@ def q_ext_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer state; truncation bias is a <= ~30-ulp geometric tail
     at 1e-9 cents, invisible at the grid.  See the block comment for
     the 100 TB shape and overflow headroom (~$3M prices)."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     bars = _day_arrays(c, [("xs", "close_c"), ("ms", "m")])
     exploded = bars.select(
@@ -1582,7 +1569,6 @@ def q_ext_flow_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT volume sums per side, one uniform minute-bucket shuffle
     (map-side combined), and a single closing ratio — the flow signal
     VPIN-style toxicity metrics build on."""
-    prepare(spark)
     btc = btcusdt(spark, sf_dir)
     qty_u = F.round(F.col("quantity") * 100000, 0).cast("long")
     is_buy = F.col("maker") == 0
@@ -1648,7 +1634,6 @@ def q_ext_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     autocovariance is non-negative (trending day, no bounce signal) —
     the standard convention.  Day emitted as TIMESTAMP per the
     q_ext_drawdown dtype note."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     dw = Window.partitionBy("day").orderBy("m")
     d = c.select(
@@ -1720,7 +1705,6 @@ def q_ext_amihud(spark: SparkSession, sf_dir: str) -> DataFrame:
     double tree.  Plan: candle aggregate reused, one extra
     minute-bucket decimal aggregate, day rollup + two
     first/last-minute self-joins on the tiny candle layer."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir).transform(scoped_persist)
     btc = btcusdt(spark, sf_dir)
     from binancedatapipelineinaws_spark.operators._util import dec
@@ -1806,7 +1790,6 @@ def q_ext_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets) — the operator's semantics don't change, only the
     prefix-sum implementation.  Tick-level precedent: q_ext_twap's
     hour-partitioned lead()."""
-    prepare(spark)
     btc = btcusdt(spark, sf_dir)
     day = F.col("time").cast("date")
     qty_u = F.round(F.col("quantity") * 100000, 0).cast("long")
@@ -1898,7 +1881,6 @@ def q_ext_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines), outputs quantized half-up to the 6-dp dollar grid (all
     state positive).  One fold per day / recursive CTE, <= 1440
     steps."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     habars = _day_arrays(
         c,
@@ -2016,7 +1998,6 @@ def q_ext_anchored_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     to double for the two closing divisions.  Plan: one minute-bucket
     shuffle, day-partitioned running window on the calendar-bounded
     minute layer."""
-    prepare(spark)
     btc = btcusdt(spark, sf_dir)
     from binancedatapipelineinaws_spark.operators._util import dec
 
@@ -2091,7 +2072,6 @@ def q_ext_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
     both integers (the typical price stays as the h+l+c cents sum,
     never /3), with one closing double division.  NULL on a flat
     frame; emitted only for full frames (the standard convention)."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     tp = c.select(
         "m",
@@ -2208,7 +2188,6 @@ def q_ext_dmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (avg-form Wilder smoothing, cents x 1e5); outputs quantize half-up
     to 5 dp on the integer grid (DI as 100*dm/tr; NULL when TR or
     DM+DM is zero).  Emitted from bar 15 on."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     dm = _day_arrays(
         c,
@@ -2331,7 +2310,6 @@ def q_ext_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number and count windows -> day-keyed aggregate.  Everything
     after the candles is calendar-bounded (<=1440 rows/day/partition),
     the indicator tier's standard 100 TB argument."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     dw = Window.partitionBy("day").orderBy("m")
     d = c.select(
@@ -2434,7 +2412,6 @@ def q_ext_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     the day-partitioned lag, then a day-keyed 6-number moment
     aggregate.  100 TB: both tick passes are uniform-key partial
     aggregates; everything after is calendar-bounded."""
-    prepare(spark)
     btc = btcusdt(spark, sf_dir)
     qty_u = F.round(F.col("quantity") * 100000, 0).cast("long")
     flow = btc.groupBy(
@@ -2549,7 +2526,6 @@ def q_ext_range_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     day rollup + two first/last-minute joins on the tiny candle
     layer -> map-only closing algebra.  Day count is calendar-bounded
     at any corpus size."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir).transform(scoped_persist)
     byday = c.groupBy("day").agg(
         F.min("m").alias("first_m"),
@@ -2641,7 +2617,6 @@ def q_ext_intraday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: candle aggregate (one tick shuffle) -> one 1440-key
     aggregate, partial map-side; output is calendar-bounded (<= 1440
     rows) at any corpus size."""
-    prepare(spark)
     c = _candles_c(spark, sf_dir)
     mod = (F.hour("m") * 60 + F.minute("m")).cast("long")
     n = F.count("*")

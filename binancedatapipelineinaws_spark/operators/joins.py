@@ -21,7 +21,7 @@ from binancedatapipelineinaws_spark.plans.flagship import (
     local_supplier_revenue,
 )
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 
@@ -35,7 +35,6 @@ WHERE o_orderstatus = 'F'
 """,
 )
 def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -53,7 +52,6 @@ FROM customer LEFT JOIN orders
 """,
 )
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return c.join(
@@ -72,7 +70,6 @@ FROM customer RIGHT JOIN orders
 """,
 )
 def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return c.join(
@@ -95,7 +92,6 @@ FROM cust_n FULL OUTER JOIN supp_n ON cust_n.nk = supp_n.nk
 """,
 )
 def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = (
         load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk"))
@@ -125,7 +121,6 @@ GROUP BY n_name, r_name
 def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast of the dims: BroadcastHashJoin, zero shuffle of
     the customer side (asserted in tests)."""
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     n = F.broadcast(load_table(spark, sf_dir, "nation"))
     r = F.broadcast(load_table(spark, sf_dir, "region"))
@@ -149,7 +144,6 @@ WHERE EXISTS (SELECT 1 FROM orders
 """,
 )
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
@@ -165,7 +159,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """,
 )
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
@@ -180,7 +173,6 @@ SELECT r_name, n_name FROM region CROSS JOIN nation
 """,
 )
 def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
     return r.crossJoin(n).select("r_name", "n_name")
@@ -206,7 +198,6 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (theta) join: price bands.  The band table is tiny, so
     Spark plans BroadcastNestedLoopJoin — each row tests ~11 bands,
     no shuffle.  At 100 TB this stays a broadcast."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     bands = spark.range(11).select(
         F.col("id").alias("band_id"),
@@ -253,7 +244,6 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics = DuckDB ASOF LEFT JOIN: for each purchase, the latest
     click of the same user with click.ts <= purchase.ts.
     """
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -299,7 +289,6 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_join_multiway", oracle=FLAGSHIP_ORACLE)
 def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship 6-table chain (plans/flagship.py)."""
-    prepare(spark)
     return local_supplier_revenue(spark, sf_dir)
 
 
@@ -336,7 +325,6 @@ def q_join_topk_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared key, the aggregate is partial+final, and the top-10 is
     TakeOrderedAndProject — no global sort.  Exact-decimal revenue
     (order-independent sums) cast to double at the boundary."""
-    prepare(spark)
     cutoff = "1995-03-15"
     cust = F.broadcast(
         load_table(spark, sf_dir, "customer").filter(
@@ -391,7 +379,6 @@ def q_ext_ship_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers one priority's delays per task — the
     q_ext_len_bands_by_lang discipline, with approx_percentile as the
     documented 100 TB swap."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", F.to_date("o_orderdate").alias("od")
     )
@@ -441,7 +428,6 @@ def q_ext_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-fact orders-lineitem join and the final nations-bounded
     aggregate.  Exact-decimal revenue summed order-independently, cast
     to double at the boundary (the q_join_topk_revenue discipline)."""
-    prepare(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
@@ -515,7 +501,6 @@ def q_ext_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters push into the lineitem/orders scans; one fact-fact shuffle;
     exact-decimal revenue; the top-20 is TakeOrderedAndProject with a
     deterministic (revenue desc, custkey) tiebreak in both engines."""
-    prepare(spark)
     cust = F.broadcast(
         load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_nationkey", "c_acctbal"
@@ -578,7 +563,6 @@ def q_ext_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregate; exact-decimal product.  At 100 TB this is the
     pure scan-bandwidth query — row-group statistics skip everything
     outside the ship-date range."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-01-01"))
@@ -629,7 +613,6 @@ def q_ext_ltv_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back (both shuffles on the uniform customer key), then a
     years^2-bounded rollup — the output is calendar-bounded at any
     corpus size."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     firsts = o.groupBy("o_custkey").agg(
         F.min(F.year("o_orderdate")).alias("cohort_year")
@@ -692,7 +675,6 @@ def q_ext_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (supplier dim broadcast into the scan); nation totals are a
     nations-bounded rollup of the same cells joined back by broadcast;
     exact-decimal partials make shares schedule-independent."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sup = F.broadcast(
         load_table(spark, sf_dir, "supplier").select(
@@ -780,7 +762,6 @@ def q_ext_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact decimal so partial-agg schedules and engines agree
     bit-for-bit; averages derived from the exact sums, not avg()
     (whose double accumulation is order-dependent)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2001-06-01")
     )
@@ -843,7 +824,6 @@ def q_ext_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial+final 1-row aggregate; both the numerator and the
     denominator are exact-decimal sums, the percentage is one double
     division at the end."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-07-01"))
@@ -897,7 +877,6 @@ def q_ext_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe), customer broadcasts, and the top-100 is
     TakeOrderedAndProject.  At 100 TB the only exchange is the
     orderkey partial-agg — the join side is all broadcast."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
@@ -960,7 +939,6 @@ def q_ext_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     (union of the three brand clauses) prunes the broadcast build
     side, and the quantity prefilter (union of the quantity bands)
     pushes to the lineitem scan.  One 1-row exact-decimal aggregate."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity").between(1, 30)
     )
@@ -1040,7 +1018,6 @@ def q_ext_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates post-join over already-tiny sides; the date filter
     pushes to the lineitem scan; the only shuffle is the fact-fact
     orderkey join; exact-decimal volume."""
-    prepare(spark)
     nations = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2")
     )
@@ -1130,7 +1107,6 @@ def q_ext_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the orderkey fact-fact join; numerator and denominator are
     exact-decimal sums split by CASE in ONE aggregate pass, divided
     once at the end."""
-    prepare(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
@@ -1205,7 +1181,6 @@ def q_ext_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final aggregate over the tiny count domain.  At 100 TB
     both aggregations combine map-side; the only wide shuffle is the
     custkey join."""
-    prepare(spark)
     per_cust = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -1251,7 +1226,6 @@ def q_ext_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass; the supplier dim broadcasts.  Revenue is EXACT DECIMAL so
     the `= max` comparison is safe — with float sums ties would be
     schedule-dependent."""
-    prepare(spark)
     d2 = "decimal(18,2)"
     rev = F.col("l_extendedprice").cast(d2) * (
         F.lit(1).cast(d2) - F.col("l_discount").cast(d2)
@@ -1317,7 +1291,6 @@ def q_ext_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold test is rewritten ALL-INTEGER (qty < 0.2*sum/cnt  <=>
     5*qty*cnt < sum for positive integers), so no float division can
     flip a row between engines or partial-agg schedules."""
-    prepare(spark)
     brand_parts = F.broadcast(
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == "Brand#23")
@@ -1375,7 +1348,6 @@ def q_ext_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     date comparison riding the join condition (each order emitted at
     most once, no post-join dedup), then a priorities-bounded
     aggregate."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-04-01"))
@@ -1421,7 +1393,6 @@ def q_ext_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as a threshold (deterministic: exact integer-cent sum, one
     IEEE division); the NOT EXISTS is one left-anti join on the
     customer key; output is a 1-row exact-decimal rollup."""
-    prepare(spark)
     d2 = "decimal(18,2)"
     pos = (
         load_table(spark, sf_dir, "customer")
@@ -1473,7 +1444,6 @@ def q_ext_catalog_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated), the catalog left-joins that key set, and the flags
     roll up to one row.  At 100 TB the fact table contributes only
     its key dictionary to the join."""
-    prepare(spark)
     ordered_parts = (
         load_table(spark, sf_dir, "lineitem").select("l_partkey").distinct()
     )
@@ -1525,7 +1495,6 @@ def q_ext_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     per task reach the driver-side merge — never a global sort).
     Exact-decimal revenue, tie-broken by order key so the row set is
     engine-portable."""
-    prepare(spark)
     cutoff = "1997-06-15"
     cust = F.broadcast(
         load_table(spark, sf_dir, "customer")
@@ -1583,7 +1552,6 @@ def q_ext_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact; count(DISTINCT supplier) runs as Spark's two-phase
     expand/partial-distinct aggregate (never a per-group set buffer);
     top-20 is TakeOrderedAndProject with a full tie-break chain."""
-    prepare(spark)
     part = F.broadcast(
         load_table(spark, sf_dir, "part")
         .filter(
@@ -1643,7 +1611,6 @@ def q_ext_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes one left-semi join against the heavy-supplier set; nation
     is a broadcast dim.  Quantity sums are exact decimal so the
     threshold compare is engine-exact."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01"))
         & (F.col("l_shipdate") < F.lit("1998-01-01"))
@@ -1733,7 +1700,6 @@ def q_ext_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact.  Semi-joining BEFORE the per-order stats is safe: the
     filter keeps or drops whole orders, so per-order aggregates are
     unchanged."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -1818,7 +1784,6 @@ def q_ext_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a codegen age filter; the tolerance adds ZERO extra plan cost
     (vs a range join, which would be quadratic per key).  Ages are
     floored-epoch integer differences, engine-exact."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -1918,7 +1883,6 @@ def q_ext_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface identically in both engines (all tying suppliers emitted,
     per spec).  Top-100 is TakeOrderedAndProject with a full
     tie-break chain."""
-    prepare(spark)
     d2 = "decimal(18,2)"
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "EUROPE"
@@ -2029,7 +1993,6 @@ def q_ext_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the cost fraction all decimal; one cast-to-double + round(6)
     after the sum), so partial-aggregate scheduling cannot flip a
     digit between engines."""
-    prepare(spark)
     d2 = "decimal(18,2)"
     part = (
         load_table(spark, sf_dir, "part")
@@ -2120,7 +2083,6 @@ def q_ext_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiply so the product stays under precision 38 un-rounded —
     no rounding of any kind can flip a boundary part between
     engines."""
-    prepare(spark)
     d2 = "decimal(18,2)"
     nation = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name") == "NATION_7"
@@ -2209,7 +2171,6 @@ def q_ext_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage-codegen aggregate over at most 3 groups — partial
     aggregation collapses everything map-side, so the final exchange
     moves ~3 rows per task."""
-    prepare(spark)
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(

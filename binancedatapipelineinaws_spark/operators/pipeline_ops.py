@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.canonical import TICKS_CTE, ticks
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 
 
 @register(
@@ -30,7 +29,6 @@ FROM ticks
 def q_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Select/reorder/rename the 6 wire fields (t,s,p,q,T,m ->
     bid,parameter,...), main.py:61-66."""
-    prepare(spark)
     return ticks(spark, sf_dir).select(
         F.col("trade_id").alias("bid"),
         F.col("symbol").alias("parameter"),
@@ -55,7 +53,6 @@ FROM ticks
 )
 def q_cast_price_2dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """round(float(p), 2) then '%.2f' (main.py:63)."""
-    prepare(spark)
     t = ticks(spark, sf_dir)
     price = (
         F.col("price_str").cast("decimal(18,8)").cast("decimal(18,2)").cast("double")
@@ -80,7 +77,6 @@ FROM ticks
 )
 def q_trunc_qty_5dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """str(q)[:-3] — string truncation, NOT rounding (main.py:64)."""
-    prepare(spark)
     t = ticks(spark, sf_dir)
     trunc = F.substring(
         F.col("qty_str"), 1, F.length(F.col("qty_str")) - F.lit(3)
@@ -109,7 +105,6 @@ FROM ticks
 def q_epoch_ms_to_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """epoch-ms -> second-granularity timestamp, '%Y-%m-%d %H:%M:%S'
     (main.py:56): millisecond precision deliberately discarded."""
-    prepare(spark)
     t = ticks(spark, sf_dir)
     epoch_s = F.expr("trade_time_ms DIV 1000")
     return t.select(
@@ -136,7 +131,6 @@ FROM ticks
 )
 def q_bool_to_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bool -> 1/0 tinyint encoding (main.py:57-59)."""
-    prepare(spark)
     t = ticks(spark, sf_dir)
     flag = F.when(F.col("is_buyer_maker"), 1).otherwise(0)
     return t.select(
@@ -159,7 +153,6 @@ WHERE symbol = 'BTCUSDT' AND trade_id % 3 = 0
 def q_filter_symbol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-symbol predicate, the manual 'pushdown' of subscribing to one
     stream (main.py:32); Catalyst pushes it into the parquet scan."""
-    prepare(spark)
     return (
         ticks(spark, sf_dir)
         .filter((F.col("symbol") == "BTCUSDT") & (F.col("trade_id") % 3 == 0))
@@ -208,7 +201,6 @@ WHERE starts_with(key, 'data_1_min/') AND key LIKE '%.tsv'
 )
 def q_filter_prefix_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix/suffix routing of object keys (start_all_pipeline.py:448-450)."""
-    prepare(spark)
     k = _keys(spark, sf_dir)
     return k.filter(
         F.col("key").startswith("data_1_min/")
@@ -230,7 +222,6 @@ FROM keys WHERE trade_id % 100 = 0
 )
 def q_url_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unquote_plus on the S3 key (lambda_function.py:13)."""
-    prepare(spark)
     k = _keys(spark, sf_dir)
     return k.filter(F.col("trade_id") % 100 == 0).select(
         "trade_id",
@@ -257,7 +248,6 @@ FROM keys WHERE trade_id % 50 = 0
 def q_string_concat_fmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """f-string/concat assembly of s3://bucket/key and file names
     (lambda_function.py:18, main.py:40-41,61-66)."""
-    prepare(spark)
     k = _keys(spark, sf_dir)
     return k.filter(F.col("trade_id") % 50 == 0).select(
         "trade_id",
@@ -287,7 +277,6 @@ FROM keys WHERE trade_id % 25 = 0
 )
 def q_split_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """key.split('/')[-1] basename extraction (lambda_function.py:35-48)."""
-    prepare(spark)
     k = _keys(spark, sf_dir)
     return k.filter(F.col("trade_id") % 25 == 0).select(
         "trade_id",
@@ -317,7 +306,6 @@ def q_minute_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int(T/60000) bucketing and the *60 file-name epoch (main.py:26-41),
     plus the window() equivalence: window('1 minute').start ==
     timestamp of bucket*60."""
-    prepare(spark)
     t = ticks(spark, sf_dir)
     bucket = F.expr("trade_time_ms DIV 60000")
     ts = F.timestamp_seconds(F.expr("trade_time_ms DIV 1000"))

@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 
@@ -43,7 +42,6 @@ FROM customer
 """,
 )
 def q_fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -99,7 +97,6 @@ WHERE l_orderkey % 100 = 0
 """,
 )
 def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 100 == 0
     )
@@ -142,7 +139,6 @@ FROM events WHERE event_id % 10 = 0
 """,
 )
 def q_fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
     return ev.select(
         "event_id",
@@ -185,7 +181,6 @@ FROM orders WHERE o_orderkey % 7 = 0
 """,
 )
 def q_fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
     return o.select(
         "o_orderkey",
@@ -229,7 +224,6 @@ FROM lineitem WHERE l_orderkey % 200 = 0
 """,
 )
 def q_fn_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 200 == 0
     )
@@ -267,7 +261,6 @@ FROM events WHERE event_id % 5 = 0
 def q_fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction over events.props (the Binance wire format is
     JSON too, main.py:35)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 5 == 0)
     return ev.select(
         "event_id",
@@ -301,7 +294,6 @@ def q_fn_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL — also pin TRUE), and schema_of_json must infer a schema
     containing field k.  (Converted from rows-only per VERDICT r7
     item 2.)"""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     parsed = ev.select("event_id", F.from_json("props", "k INT").alias("p"))
     reparsed = F.from_json(F.to_json("p"), "k INT")
@@ -348,7 +340,6 @@ def q_fn_array_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs are serialized to comma-joined strings in BOTH engines so
     every checked output column is scalar (the driver's compare sorts
     rows with pandas, which cannot hash list cells)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 500 == 0
     )
@@ -413,7 +404,6 @@ def q_fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     element_at.  Keys/values are rendered as comma-joined strings so the
     checked output is all-scalar (oracle constructs the same strings
     directly — DuckDB has no Spark-equivalent map literal)."""
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     m = F.create_map(
         F.lit("segment"), F.col("c_mktsegment"),
@@ -439,7 +429,6 @@ FROM customer WHERE c_custkey % 10 = 0
 """,
 )
 def q_fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 10 == 0)
     return c.select(
         "c_custkey",
@@ -481,7 +470,6 @@ def q_fn_hash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality plus TRUE structural invariants (injectivity /
     near-injectivity / value range); a misbehaving hash kernel breaks
     the gate hash.  (Converted from rows-only per VERDICT r7 item 2.)"""
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     hashed = c.select(
         "c_name",
@@ -529,7 +517,6 @@ WHERE l_orderkey % 100 = 0
 def q_fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise family (MySQL 5.7 surface: & | ^ ~ << >> BIT_COUNT) —
     used internally by the SimHash/LSH dedup tier."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 100 == 0
     )
@@ -566,7 +553,6 @@ def q_fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookaround, no backrefs) so Java regex and DuckDB's RE2 agree;
     the oracle mirrors each call (regexp_replace needs the 'g' flag —
     DuckDB replaces first-only by default where Spark replaces all)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_id") % 7 == 0
     )

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 N_SALTS = 8
@@ -33,7 +33,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst-case skew shape.  The oracle is the naive single-phase groupBy:
     identical result (decimal sums are associative), different shuffle
     profile."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     salted = li.withColumn(
         "salt", (F.xxhash64("l_orderkey", "l_linenumber") % N_SALTS)
@@ -61,7 +60,6 @@ FROM lineitem GROUP BY l_returnflag
 def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (both engines use the same
     linear-interpolation definition)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.expr("percentile(l_extendedprice, 0.5)"), 6).alias("p50"),
@@ -106,7 +104,6 @@ def q_agg_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check per VERDICT r7 item 2; production keeps only the
     one-pass sketch column — the exact quantiles here are the gate's
     cost.)"""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     lo = [max(0.0, p - APPROX_PCT_RANK_BAND) for p in (0.5, 0.95, 0.99)]
     hi = [min(1.0, p + APPROX_PCT_RANK_BAND) for p in (0.5, 0.95, 0.99)]
@@ -215,7 +212,6 @@ def q_ext_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row rollup — the audit costs one scan regardless of data size,
     which is why it's worth running BEFORE a 100 TB shuffle rather than
     discovering the straggler after."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     buckets = ev.groupBy(
         (F.col("user_id") % SKEW_BUCKETS).cast("long").alias("bucket")
@@ -272,7 +268,6 @@ def q_ext_hll_union_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine map-side); the sharded path adds one (type, shard)
     pre-aggregate then a types-bounded union — exactly the shape of a
     production sketch-table refresh + rollup."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     # exact and sketch run as separate passes joined on the bounded
     # group key: fused, RewriteDistinctAggregates drags the HLL buffer
@@ -354,7 +349,6 @@ def q_ext_theta_overlap_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) — the corpus is never touched again.  At 100 TB the exact
     path's user-keyed self-join is the expensive branch; the sketch
     branch costs one aggregate regardless of corpus size."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     du = ev.distinct().transform(scoped_persist)
     sizes = du.groupBy("event_type").agg(F.count("*").alias("n"))
@@ -484,7 +478,6 @@ def q_ext_kll_rank_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     are probabilistic: k={KLL_SKETCH_K} keeps the 99%-confidence rank
     envelope ~0.6%, a 5x margin under the {KLL_RANK_EPS} gate — see
     the KLL_SKETCH_K comment for the tail bound."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     sk = ev.groupBy("event_type").agg(
         F.kll_sketch_agg_double("value", KLL_SKETCH_K).alias("sk")
@@ -587,7 +580,6 @@ def q_ext_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     {JOIN_SALTS}); the join is a plain equi-join on (custkey, salt);
     the rollup re-aggregates per customer.  Top-20 via
     TakeOrderedAndProject (deterministic n_orders/custkey order)."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     o = orders.select(
@@ -672,7 +664,6 @@ def q_ext_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast LEFT join on the fingerprint (map-only — no fact
     shuffle).  The exact semi-join exists only to measure the filter;
     the production plan keeps just the pruned stream."""
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     dim = c.filter(F.col("c_mktsegment") == BLOOM_SEGMENT).select(
@@ -749,7 +740,6 @@ def q_ext_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: state is id_range/64 words per group regardless of row
     count; for sparse id spaces swap the chunk key to a hash bucket
     (losing exactness) or use HLL (q_agg_approx_distinct)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     chunk = (F.col("l_partkey") / BITMAP_CHUNK_BITS).cast("long").alias("chunk")
     # SQL form: the Python F.shiftleft only takes a literal shift

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 
@@ -26,7 +25,6 @@ LIMIT 25
 """,
 )
 def q_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -48,7 +46,6 @@ LIMIT 100
 def q_sort_multi_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort with explicit null ordering (negative balances
     null-ed out to exercise it)."""
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     return (
         c.select(
@@ -73,7 +70,6 @@ def q_sort_multi_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
 )
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_returnflag", "l_linestatus").distinct()
 
@@ -89,7 +85,6 @@ def q_drop_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicates with a deterministic survivor (min orderkey per
     customer) — expressed as an aggregation because 'keep an arbitrary
     row' isn't oracle-checkable."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(F.min("o_orderkey").alias("o_orderkey"))
 
@@ -103,7 +98,6 @@ SELECT event_id, user_id, 'signup' AS kind FROM events WHERE event_type = 'signu
 """,
 )
 def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     a = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", F.lit("purchase").alias("kind")
@@ -123,7 +117,6 @@ SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 9900
 """,
 )
 def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     a = o.filter(F.col("o_totalprice") > 400000).select(
@@ -144,7 +137,6 @@ SELECT s_nationkey AS nationkey FROM supplier
 """,
 )
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
@@ -164,7 +156,6 @@ SELECT s_nationkey AS nationkey FROM supplier WHERE s_acctbal > 5000
 )
 def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nations with customers but no high-balance supplier."""
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
@@ -187,7 +178,6 @@ SELECT l_returnflag AS flag FROM lineitem WHERE l_quantity > 48
 def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-semantics EXCEPT (multiplicity-preserving) — superset of
     MySQL 5.7."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_quantity") > 45).select(
         F.col("l_returnflag").alias("flag")

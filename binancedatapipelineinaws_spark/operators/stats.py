@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 HIST_WIDTH = 5000  # price units per bin
@@ -53,7 +53,6 @@ def q_ext_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any input scale.  The per-bin money total is an exact BIGINT
     cent sum divided once — order-independent at any density (the sf10
     drill caught the float form flipping 2-dp boundaries)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     bin_id = F.floor(F.col("l_extendedprice") / HIST_WIDTH).cast("long")
     return (
@@ -123,7 +122,6 @@ def mad_outliers_frame(
     partial-aggregated) with broadcast join-backs — event-type
     cardinality bounds only the tiny stats tables, never one task's
     buffer."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     if exact:
         med = ev.selectExpr(
@@ -208,7 +206,6 @@ def q_ext_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB swap countDistinct for approx_count_distinct (mergeable HLL
     sketch, same plan shape minus the expand) — the exact form is kept
     here because the oracle must reproduce the number."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count("*").alias("n_rows")]
     for c in PROFILE_COLS:
@@ -274,7 +271,6 @@ def q_ext_ri_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships as a broadcast when small (dims) and a uniform-key shuffle
     otherwise, so the sweep is a handful of independent single-join
     passes — embarrassingly parallel across relations at any scale."""
-    prepare(spark)
     parts = []
     for name, child, fk, parent, pk in RI_RELATIONS:
         c = load_table(spark, sf_dir, child)
@@ -329,7 +325,6 @@ def q_ext_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine that can md5.  Pure projection: zero Exchange."""
     from binancedatapipelineinaws_spark.functions.dedup import hex32
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
         hex32(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
@@ -387,7 +382,6 @@ def q_ext_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     a map-only stack(); price is pre-scaled so the n*Sxx - Sx^2
     cancellation stays in double precision (corr is scale-invariant,
     so both engines see identical values at 5 dp)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     scale = {"l_extendedprice": 1000.0}
 
@@ -443,7 +437,6 @@ def q_ext_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only digit projection (explicit floor() before the integer
     cast — DuckDB rounds double casts) -> 9-row aggregate; the share
     normalizes via a window over those 9 rows."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     from pyspark.sql import Window
 
@@ -498,7 +491,6 @@ def q_ext_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals join re-executes the scan."""
     from pyspark.sql import Window
 
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy(
         F.col("l_returnflag").alias("rf"),
@@ -559,7 +551,6 @@ def q_ext_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     window form (oracle unchanged)."""
     from pyspark.sql import Window
 
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
 
     def value_ranks(col: str, out: str) -> DataFrame:
@@ -624,7 +615,6 @@ def q_ext_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so the statistic costs one scan regardless of pair count.
     var_samp is Spark's numerically-stable single-pass variance and
     DuckDB's matches at the 5-dp round (means/diffs at 6 dp)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     # persisted: the groups table feeds both self-join sides, and
     # without it each side re-executes the corpus scan+aggregate
@@ -700,7 +690,6 @@ def q_ext_daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     output), then whole-partition windows over the tiny day table.
     Component-sum z-scores, not two passes: the corpus is scanned
     once at any scale."""
-    prepare(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -801,7 +790,6 @@ def ks_drift_frame(
     binned statistic is the CDF gap sampled at bin edges: a lower
     bound on the exact KS with error at most the largest bin's
     probability mass."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -935,7 +923,6 @@ def q_ext_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer boundary.  Ties are safe by construction: the VALUE at a
     global rank is tie-order-independent, and bucketing is monotonic
     in value, so in-bucket rank + offset is the exact global rank."""
-    prepare(spark)
     vals = (
         load_table(spark, sf_dir, "events")
         .select("value")
@@ -1055,7 +1042,6 @@ def q_ext_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade-off in q_agg_percentiles); at 100 TB swap the boundary pass
     to approx_percentile — the bucketing pass is unchanged (the
     q_ext_kll_rank_error gate prices that sketch's rank error)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     bnds = ev.groupBy("event_type").agg(
         *[
@@ -1150,7 +1136,6 @@ def q_ext_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     round twice and admit fused-multiply-add divergence.  100 TB: the
     moments partial-combine map-side to 6 numbers per group — the same
     cost as any sum; group count bounds the shuffle."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(18,0)")
     y = F.round(F.col("l_extendedprice") * 100, 0).cast("decimal(18,0)")
@@ -1219,7 +1204,6 @@ def q_ext_mode_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     not corpus-sized) — then windows over that TINY aggregate, never
     over raw rows; a 1-struct max_by picks the mode without a second
     shuffle.  100 TB: identical — value-domain cells, not rows."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     c = li.groupBy(
         "l_returnflag", F.col("l_quantity").cast("long").alias("qty")
@@ -1305,7 +1289,6 @@ def q_ext_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     one target bucket (~corpus/1000 rows), and a tiny window picks the
     exact element.  Identical result to the direct definition — the
     oracle IS the direct definition."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
     bucket = F.floor(cents / WM_BUCKET_CENTS).cast("long")
@@ -1447,7 +1430,6 @@ def q_ext_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag windows (a year is 365 independent 1440-row frames, the
     indicator-tier argument) -> one day rollup.  Calendar-bounded
     output."""
-    prepare(spark)
     from binancedatapipelineinaws_spark.operators.indicators import (
         _candles_c,
     )

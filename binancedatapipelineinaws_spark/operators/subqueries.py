@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.operators._util import dec_sum
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
-from binancedatapipelineinaws_spark.tables import load_table, register_views
+from binancedatapipelineinaws_spark.session import scoped_persist
+from binancedatapipelineinaws_spark.tables import load_table
 
 
 @register(
@@ -27,14 +27,13 @@ WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)
 def q_sub_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: Catalyst evaluates it once and
     broadcasts the scalar into the filter."""
-    prepare(spark)
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)
-        """
+        FROM {orders}
+        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM {orders})
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -49,15 +48,17 @@ WHERE c_nationkey IN (
 )
 def q_sub_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN (subquery) — becomes a left-semi join after rewrite."""
-    prepare(spark)
-    register_views(spark, sf_dir)
     return spark.sql(
         """
-        SELECT c_custkey, c_name FROM customer
+        SELECT c_custkey, c_name FROM {customer}
         WHERE c_nationkey IN (
-          SELECT n_nationkey FROM nation JOIN region ON n_regionkey = r_regionkey
+          SELECT n_nationkey FROM {nation} JOIN {region}
+            ON n_regionkey = r_regionkey
           WHERE r_name = 'EUROPE')
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     )
 
 
@@ -76,17 +77,17 @@ def q_sub_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates it to a left-semi join on l_suppkey with the filters
     pushed below the join, so the fact side is pruned before the
     shuffle."""
-    prepare(spark)
-    register_views(spark, sf_dir)
     return spark.sql(
         """
-        SELECT s_suppkey, s_name FROM supplier
+        SELECT s_suppkey, s_name FROM {supplier}
         WHERE EXISTS (
-          SELECT 1 FROM lineitem
+          SELECT 1 FROM {lineitem}
           WHERE l_suppkey = s_suppkey AND l_quantity >= 48
             AND l_discount >= 0.08)
         ORDER BY s_suppkey
-        """
+        """,
+        supplier=load_table(spark, sf_dir, "supplier"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -114,17 +115,17 @@ def q_sub_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark compiles this to its null-aware anti join; DuckDB implements
     the same ANSI semantics (probed: `x NOT IN (SELECT NULL)` is
     empty), so the gate pins the three-valued behavior itself."""
-    prepare(spark)
-    register_views(spark, sf_dir)
     return spark.sql(
         """
-        SELECT p_partkey, p_name FROM part p
+        SELECT p_partkey, p_name FROM {part} p
         WHERE p_partkey NOT IN (
           SELECT CASE WHEN l_returnflag = 'R' THEN l_partkey END
-          FROM lineitem WHERE l_partkey = p.p_partkey
+          FROM {lineitem} WHERE l_partkey = p.p_partkey
             AND l_quantity >= 48)
         ORDER BY p_partkey
-        """
+        """,
+        part=load_table(spark, sf_dir, "part"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -141,16 +142,16 @@ WHERE c_custkey % 5 = 0
 def q_sub_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery — decorrelated into an aggregate +
     left outer join by Catalyst."""
-    prepare(spark)
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT c_custkey,
-               (SELECT max(o_totalprice) FROM orders WHERE o_custkey = c_custkey)
-                 AS max_order
-        FROM customer
+               (SELECT max(o_totalprice) FROM {orders}
+                WHERE o_custkey = c_custkey) AS max_order
+        FROM {customer}
         WHERE c_custkey % 5 = 0
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -167,7 +168,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (engine superset of MySQL 5.7's CASE-WHEN emulation).
     Explicit value list => single-pass aggregation, no values-discovery
     job."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -187,16 +187,15 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 )
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary GROUPING SETS (superset of rollup/cube)."""
-    prepare(spark)
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
                  AS sum_price
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -217,7 +216,6 @@ FROM pl GROUP BY l_suppkey
 def q_agg_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Volume-weighted average price — THE canonical trading aggregate
     over the reference's data model (price x quantity / volume)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = F.col("l_extendedprice").cast("decimal(18,2)")
     q = F.col("l_quantity").cast("decimal(18,2)")
@@ -243,7 +241,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot / melt (inverse of q_pivot): wide measure columns to
     (measure, val) rows via the native UNPIVOT operator — a map-only
     Expand node (each input row emits k rows), no shuffle, no UDTF."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     wide = li.filter(F.col("l_orderkey") < 100).select(
         "l_orderkey",
@@ -260,16 +257,17 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One SQL text, two engines: the string below is ANSI enough that it IS
-# the oracle — Spark runs it over the registered temp views, DuckDB
-# over the same-named parquet views.  The window denominator re-casts
-# the 2-dp revenue to DECIMAL so the per-day sum is order-independent
-# (a double window sum would be schedule-dependent in the last ulp).
+# One SQL text, two engines: the template below is ANSI enough that it
+# IS the oracle — Spark runs it with ``{orders}`` bound to the loaded
+# table, DuckDB with it rendered as the plain ``orders`` parquet view.
+# The window denominator re-casts the 2-dp revenue to DECIMAL so the
+# per-day sum is order-independent (a double window sum would be
+# schedule-dependent in the last ulp).
 _SQL_SURFACE = """
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS d, o_orderpriority AS prio,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-  FROM orders
+  FROM {orders}
   GROUP BY CAST(o_orderdate AS DATE), o_orderpriority
 )
 SELECT d, prio, round(rev, 6) AS rev,
@@ -279,26 +277,24 @@ FROM daily
 """
 
 
-@register("q_sql_surface", oracle=_SQL_SURFACE)
+@register("q_sql_surface", oracle=_SQL_SURFACE.format(orders="orders"))
 def q_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pure-SQL front door: daily revenue and within-day share per
-    order priority, declared as ONE engine-portable SQL string run
-    verbatim by `spark.sql(...)` over the registered views AND by the
-    DuckDB oracle — the literal workflow of the reference's SQL
-    consumers (start_all_pipeline.py:504-520 delegates everything to
-    SQL), proving the engine's SQL surface, not just the DataFrame
-    API, produces the canonical plans (same Catalyst output either
-    way: partial+final aggregate, one day-keyed window)."""
-    prepare(spark)
-    register_views(spark, sf_dir)
-    return spark.sql(_SQL_SURFACE)
+    order priority, declared as ONE engine-portable SQL string run by
+    `spark.sql(...)` over the loaded table AND by the DuckDB oracle —
+    the literal workflow of the reference's SQL consumers
+    (start_all_pipeline.py:504-520 delegates everything to SQL),
+    proving the engine's SQL surface, not just the DataFrame API,
+    produces the canonical plans (same Catalyst output either way:
+    partial+final aggregate, one day-keyed window)."""
+    return spark.sql(_SQL_SURFACE, orders=load_table(spark, sf_dir, "orders"))
 
 
 # --- recursive CTE (Spark 4 surface) ----------------------------------------
 # WITH RECURSIVE landed in Spark 4.0 (SPARK-24497); this registers it
 # with a real use: shortest-hop reachability over the event-type
 # transition graph.  The Spark side builds the edge table as a
-# PERSISTED DataFrame and recurses over that cached view: a naive
+# PERSISTED DataFrame and recurses over that cached frame: a naive
 # one-string form (which the DuckDB oracle, a materializing engine,
 # runs verbatim) inlines the edges CTE into the UnionLoop STEP, so
 # every iteration re-scans the corpus and re-runs the lead() window —
@@ -310,10 +306,10 @@ REACH_MAX_HOPS = 4
 
 _REACH_RECURSION_SQL = f"""
 WITH RECURSIVE reach (src, dst, hops) AS (
-  SELECT src, dst, 1 FROM transition_edges
+  SELECT src, dst, 1 FROM {{edges}}
   UNION ALL
   SELECT r.src, e.dst, r.hops + 1
-  FROM reach r JOIN transition_edges e ON e.src = r.dst
+  FROM reach r JOIN {{edges}} e ON e.src = r.dst
   WHERE r.hops < {REACH_MAX_HOPS} AND e.dst != r.src
 )
 SELECT src, dst, CAST(min(hops) AS BIGINT) AS min_hops
@@ -353,7 +349,7 @@ def q_ext_transition_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixpoint is deterministic in both engines.
 
     Plan: one user-partitioned lead() window + distinct builds the
-    edge list (types^2-bounded), PERSISTED and registered as a view so
+    edge list (types^2-bounded), PERSISTED and bound into the SQL so
     the recursion's anchor AND step read the cache — without it Spark
     inlines the edge CTE into the loop and re-scans the corpus per
     iteration (machine-asserted in tests/test_plans.py).  At 100 TB
@@ -361,7 +357,6 @@ def q_ext_transition_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on the type alphabet, not the data."""
     from pyspark.sql import Window
 
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     edges = (
@@ -371,7 +366,10 @@ def q_ext_transition_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("dst").isNotNull() & (F.col("dst") != F.col("src")))
         .distinct()
-        .transform(scoped_persist)
     )
-    edges.createOrReplaceTempView("transition_edges")
-    return spark.sql(_REACH_RECURSION_SQL)
+    reach = spark.sql(_REACH_RECURSION_SQL, edges=edges)
+    # persist AFTER binding: spark.sql drops the temp view it bound
+    # `edges` to, and dropping a view uncaches its plan.  The cache is
+    # matched into `reach`'s plan when `reach` executes.
+    scoped_persist(edges)
+    return reach

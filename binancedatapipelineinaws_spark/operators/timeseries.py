@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare, scoped_persist
+from binancedatapipelineinaws_spark.session import scoped_persist
 from binancedatapipelineinaws_spark.tables import load_table
 
 
@@ -69,7 +69,6 @@ def q_ext_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades occurred (main.py:26-40 always advances the bucket); this is
     the batch operator that reconstructs that dense series.
     """
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     # `agg` feeds BOTH the bounds subtree and the join's probe side;
     # without persist Spark re-executes the full scan+aggregate lineage
@@ -187,7 +186,6 @@ def q_win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     flipping 24/6M rows).  Degenerate frames (constant series, n=1)
     yield NULL via the NULLIF guard in both engines.
     """
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # exact integer sums over scaled values (see the oracle comment):
     # order-independent across frame folds, segment trees, and partial
@@ -289,7 +287,6 @@ def q_ext_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     state bounded by an hour of one symbol's ticks.  Epochs are cast to
     BIGINT before differencing in the oracle — DuckDB's epoch() is
     DOUBLE and its // does not floor doubles."""
-    prepare(spark)
     df = btcusdt(spark, sf_dir)
     hour = F.date_trunc("hour", "time")
     w = Window.partitionBy(hour).orderBy("time", "bid")
@@ -342,7 +339,6 @@ def q_ext_realized_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     work all happened inside the reused q_agg_ohlcv_1min plan).
     Returns are day-partitioned, so the first minute of each day has no
     return (count(r) skips the NULL in both engines)."""
-    prepare(spark)
     closes = q_agg_ohlcv_1min(spark, sf_dir).select(
         F.col("minute_start").alias("m"), "close"
     )
@@ -385,7 +381,6 @@ def q_ext_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled up to the worst peak-to-trough fraction.  Runs entirely on
     the calendar-bounded candle layer; the running-extrema window is
     the pattern (cumulative max) that rolling frames can't replace."""
-    prepare(spark)
     closes = q_agg_ohlcv_1min(spark, sf_dir).select(
         F.col("minute_start").alias("m"), "close"
     )
@@ -452,7 +447,6 @@ def q_ext_return_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded candle layer, then ONE 1-row aggregate computes
     Pearson r from (n, Sx, Sy, Sxx, Syy, Sxy).  Day partitioning drops
     cross-midnight pairs in both engines identically."""
-    prepare(spark)
     closes = q_agg_ohlcv_1min(spark, sf_dir).select(
         F.col("minute_start").alias("m"), "close"
     )
@@ -505,7 +499,6 @@ def q_ext_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizes via a window over those cells.  Spark's dayofweek() is
     1=Sunday while DuckDB's extract(dow) is 0=Sunday, so the Spark
     side subtracts 1 to align the encodings."""
-    prepare(spark)
     df = btcusdt(spark, sf_dir)
     g = df.groupBy(
         (F.dayofweek("time") - 1).cast("long").alias("day_of_week"),
@@ -567,7 +560,6 @@ def q_ext_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^53 and the n*Sxx - Sx^2 cancellation would eat the slope.  Both
     engines truncate the timestamp to whole seconds first
     (unix_timestamp ≡ floor(epoch()))."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     h = (F.unix_timestamp("ts").cast("long") - TREND_EPOCH0) / 3600.0
     x = ev.select("event_type", h.alias("h"), F.col("value").alias("y"))
@@ -613,7 +605,6 @@ def q_ext_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     two middle values (Spark `percentile` == DuckDB `quantile_cont`),
     and the frame's total order (ts, event_id) leaves no tie ambiguity
     at any scale."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("event_type")
@@ -732,7 +723,6 @@ def q_ext_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds for mu/sigma and a struct-accumulator fold
     (snapshot-semantics F.aggregate) for the (s+, s-, alarms) state.
     At 100 TB the fold input is days-per-type, not rows."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")

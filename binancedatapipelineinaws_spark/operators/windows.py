@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 
@@ -35,7 +34,6 @@ SELECT * FROM (
 def q_win_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 earliest shipments per supplier — the dedup/top-per-key
     idiom."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_suppkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
@@ -63,7 +61,6 @@ WHERE o_totalprice > 450000
 """,
 )
 def q_win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000)
     w = Window.partitionBy("o_orderpriority").orderBy(F.col("o_totalprice").desc())
     return o.select(
@@ -87,7 +84,6 @@ FROM events
 )
 def q_win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tick-return idiom: previous/next value per user stream."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
@@ -116,7 +112,6 @@ FROM events
 )
 def q_win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative volume idiom."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -149,7 +144,6 @@ FROM events
 def q_win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-row moving average, exact-decimal numerator (sliding-frame
     recompute vs segment-tree would diverge in float)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -192,7 +186,6 @@ def q_win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is defined by event-time distance), measured on floored
     epoch seconds in BOTH engines (unix_timestamp floors; the oracle
     floors explicitly)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -227,7 +220,6 @@ FROM customer
 """,
 )
 def q_win_ntile_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prepare(spark)
     c = load_table(spark, sf_dir, "customer")
     order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
     w = Window.partitionBy("c_mktsegment").orderBy(*order)
@@ -259,7 +251,6 @@ FROM orders WHERE o_orderkey % 20 = 0
 def q_win_percent_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / ntile — distribution-position window
     functions (engine superset of MySQL 5.7)."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 20 == 0)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return o.select(

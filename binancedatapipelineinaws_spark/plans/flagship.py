@@ -15,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from binancedatapipelineinaws_spark.session import prepare
-from binancedatapipelineinaws_spark.tables import load_tables
+from binancedatapipelineinaws_spark.tables import load_table
 
 # Exact-decimal money arithmetic: sums are order-independent, so the
 # result is bit-identical across partial-aggregation schedules and
@@ -38,7 +37,10 @@ def local_supplier_revenue(
     date_lo: str = "1995-01-01",
     date_hi: str = "1998-01-01",
 ) -> DataFrame:
-    t = load_tables(spark, sf_dir)
+    t = {
+        n: load_table(spark, sf_dir, n)
+        for n in ("region", "nation", "customer", "supplier", "orders", "lineitem")
+    }
     # dims are tiny: broadcast so the fact-side join is shuffle-free
     nation = F.broadcast(t["nation"])
     region_df = F.broadcast(t["region"].filter(F.col("r_name") == region))
@@ -83,5 +85,4 @@ ORDER BY revenue DESC, n_name
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    prepare(spark)
     return local_supplier_revenue(spark, "/root/testdata/sf0.001")

@@ -3,7 +3,8 @@ ids to (a) an idiomatic-Spark callable and (b) the ANSI-SQL oracle that
 DuckDB runs over the same parquet for the correctness gate.
 
 Every operator the engine claims is registered here exactly once; the
-driver contract file ``__spark_entry__.py`` just re-exports this.
+driver contract file ``__spark_entry__.py`` re-exports this, applying
+the session contract before each query.
 ``all_specs``, ``queries`` and ``oracle_sql`` iterate in registration
 order: the order the query modules were first imported, then
 definition order within each module.  The registry reads no file.

@@ -1,10 +1,16 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory and the engine's one session contract.
 
 Local mode is the test harness; the configs are chosen to also be the
 right defaults on a large cluster: AQE on (runtime join re-planning,
 skew-join splitting, partition coalescing), UTC session timezone
 (parity with the reference's naive second-granularity timestamps,
 main.py:56), Arrow enabled for the Pandas-UDF slow path.
+
+The runtime contract every query assumes is ``_SESSION_CONTRACT``.
+``get_spark`` bakes it into the sessions it builds, and ``prepare``
+applies it to a session built elsewhere; ``__spark_entry__`` calls
+``prepare`` where a foreign session enters.  Query builders write no
+session state of their own.
 """
 
 from __future__ import annotations
@@ -15,6 +21,17 @@ from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+# The runtime confs every query assumes.  Timezone matters most: every
+# epoch<->timestamp query assumes UTC, matching DuckDB's naive
+# timestamps.  nanosAsLong lets the parquet reader open TIMESTAMP(NANOS)
+# columns (as longs; ``tables._load_events`` truncates them to micros).
+_SESSION_CONTRACT = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 
 def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
@@ -45,10 +62,9 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        .config(map=_SESSION_CONTRACT)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.driver.memory",
@@ -78,12 +94,11 @@ def get_spark(
 
 
 def prepare(spark: SparkSession) -> SparkSession:
-    """Idempotently apply runtime-settable configs to a session we did
-    not create (the driver hands us one).  Timezone matters most: every
-    epoch<->timestamp query assumes UTC, matching DuckDB's naive
-    timestamps."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    """Idempotently apply the session contract to a session we did not
+    create (the driver hands us one).  Query builders never call this:
+    it runs once where a foreign session enters."""
+    for key, value in _SESSION_CONTRACT.items():
+        spark.conf.set(key, value)
     return spark
 
 

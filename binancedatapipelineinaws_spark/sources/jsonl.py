@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.canonical import BTCUSDT_CTE, btcusdt
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.sources.tsv import (
     BTCUSDT_SCHEMA,
     _tmp_path,
@@ -42,7 +41,6 @@ def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied scan.  The oracle is the canonical table itself — doubles
     survive via shortest-round-trip serialization, timestamps via ISO
     8601 in the UTC session."""
-    prepare(spark)
     path = _tmp_path("btcusdt_jsonl", sf_dir)
     btcusdt(spark, sf_dir).write.mode("overwrite").json(path)
     return spark.read.schema(BTCUSDT_SCHEMA).json(path)
@@ -81,7 +79,6 @@ def q_scan_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambda_function.py:26).  The oracle re-derives the class counts
     from the injection rules; the Spark side must actually write,
     corrupt, re-read, and classify to reproduce them."""
-    prepare(spark)
     path = _tmp_path("btcusdt_jsonl_q", sf_dir)
     base = btcusdt(spark, sf_dir)
     line = F.to_json(

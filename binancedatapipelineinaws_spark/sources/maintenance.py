@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.sources.tsv import _tmp_path
 from binancedatapipelineinaws_spark.tables import load_table
 
@@ -50,7 +49,6 @@ def q_maint_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout contract — if compaction over- or under-merged, the
     measured counts would break the match.  Row count is re-read from
     the compacted output, so data loss would too."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events").select("event_id")
     frag_path = _tmp_path("events_frag", sf_dir)
     events.repartition(FRAGMENT_FILES).write.mode("overwrite").parquet(frag_path)
@@ -114,7 +112,6 @@ def q_ext_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order key per event over (user_id, value) buckets — map-only
     bit arithmetic.  Writing `events` range-partitioned by zvalue
     co-locates both dimensions per file for min/max data skipping."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     bu = (F.col("user_id") % (1 << Z_BITS)).cast("long")
     bv = F.floor(F.col("value")).cast("long") % (1 << Z_BITS)
@@ -146,7 +143,6 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory; `mergeSchema` reconciles them at read and back-fills the
     missing column with nulls.  The query verifies every row survived
     and null-ness tracks exactly which batch a row came from."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     path = _tmp_path("events_evolve", sf_dir)
     old = events.filter(F.col("event_id") % 2 == 0).select("event_id", "value")
@@ -194,7 +190,6 @@ def q_maint_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranges is an invariant of the layout, and the oracle states it as
     the expected constant.  At 100 TB the same two-liner scales by
     raising the partition count to ceil(bytes / 512 MB)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     path = _tmp_path("lineitem_sorted", sf_dir)
     (
@@ -269,7 +264,6 @@ def q_maint_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest: the layout the reference's Aurora gets from its B-tree
     primary key (start_all_pipeline.py:463-464), re-expressed as a
     lake-table property."""
-    prepare(spark)
     digest = __import__("hashlib").md5(sf_dir.encode()).hexdigest()[:8]
     t_orders = f"b_orders_{digest}_{os.getpid()}"
     t_lineitem = f"b_lineitem_{digest}_{os.getpid()}"
@@ -342,7 +336,6 @@ def q_maint_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the measured dir count equal to the oracle by construction (and
     cannot change n_rows/n_users: the read-back filters on a
     non-NULL constant)."""
-    prepare(spark)
     events = (
         load_table(spark, sf_dir, "events")
         .select("event_id", "user_id", "event_type")
@@ -410,7 +403,6 @@ def q_maint_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct column); production would swap approx_count_distinct
     (HLL, 2% default error) for the same plan minus the expansion —
     the documented exact/approx fork, same as q_agg_distinct."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     date_s = F.col("l_shipdate").cast("date").cast("string")
     agg = li.agg(

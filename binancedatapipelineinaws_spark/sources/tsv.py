@@ -20,7 +20,6 @@ from pyspark.sql import types as T
 
 from binancedatapipelineinaws_spark.canonical import BTCUSDT_CTE, btcusdt
 from binancedatapipelineinaws_spark.registry import register
-from binancedatapipelineinaws_spark.session import prepare
 from binancedatapipelineinaws_spark.tables import load_table
 
 # The Aurora DDL (start_all_pipeline.py:463-464), with price/quantity as
@@ -95,7 +94,6 @@ def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Columnar scan with filter pushdown + column pruning: the plan
     reads 4 of 11 columns and ships the predicates to the parquet
     reader (asserted in tests via PushedFilters)."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= "1997-06-01") & (F.col("l_quantity") < 5)
@@ -110,7 +108,6 @@ def q_scan_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip: canonical rows -> per-minute TSV files -> schema-applied
     scan.  The oracle is the canonical table itself — the round trip must
     be lossless given the reference's formats."""
-    prepare(spark)
     path = _tmp_path("btcusdt_tsv", sf_dir)
     write_btcusdt_tsv(btcusdt(spark, sf_dir), path)
     return read_btcusdt_tsv(spark, path)
@@ -133,7 +130,6 @@ def q_sink_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serialization projection: exact reference line fields
     (main.py:56-66).  File writing itself is exercised by q_scan_tsv and
     the streaming tests."""
-    prepare(spark)
     return sink_projection(btcusdt(spark, sf_dir))
 
 
@@ -157,7 +153,6 @@ def q_sink_table_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     maker==1 partition, read back and aggregate.  The oracle describes
     the APPENDED table (base UNION ALL appended half) directly — no
     arithmetic correction."""
-    prepare(spark)
     path = _tmp_path("btcusdt_tbl", sf_dir)
     df = btcusdt(spark, sf_dir)
     df.write.mode("overwrite").parquet(path)  # fresh epoch each run
@@ -206,7 +201,6 @@ def q_scan_tsv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     try_cast: unparseable rows are counted per reason instead of
     failing the job.  At 100 TB the same projection splits the stream
     into a clean table and a quarantine table in one pass."""
-    prepare(spark)
     wire = sink_projection(btcusdt(spark, sf_dir)).select(
         "bid",
         "parameter",
@@ -316,7 +310,6 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     like parquet; the filter lands in PushedFilters the same way).
     100 TB: format choice changes the scan layer only — every plan in
     the registry runs identically over an ORC lake."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     path = _tmp_path("lineitem_orc", sf_dir)
     li.write.mode("overwrite").orc(path)

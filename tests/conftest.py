@@ -8,12 +8,10 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 from binancedatapipelineinaws_spark.session import get_spark  # noqa: E402
+from tools.check_oracle import duck_views  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -24,11 +22,6 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_ORACLE}/{t}.parquet')"
-        )
+    con = duck_views(duckdb.connect(), SF_ORACLE)
     yield con
     con.close()

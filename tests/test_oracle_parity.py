@@ -1,43 +1,48 @@
 """Replicates the driver's correctness gate: every registered query with
 an oracle must match DuckDB on row count, column names, and
-order-insensitive values at sf0.01 (same compare as
-tools/check_oracle.py)."""
+order-insensitive values at sf0.01, through the gate's own compare
+(``tools.check_oracle.run_one``).
+
+Each id must also leave the session as it found it: the same runtime
+conf and the same temporary views (query builders write no session
+state; ``session.get_spark``/``session.prepare`` own the contract).
+Persistent tables that the maintenance and scaling ids create on
+purpose, and the ``tag_exploder`` UDTF registration that
+``q_ext_udtf_explode_keys`` exercises, are not session conf or views."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import SF_ORACLE
 
 from binancedatapipelineinaws_spark.registry import all_specs
-from tools.check_oracle import normalize
+from binancedatapipelineinaws_spark.session import persist_scope
+from tools import check_oracle
 
 SPECS = all_specs()
 
 
-@pytest.mark.parametrize("name", sorted(SPECS))
-def test_query_matches_oracle(name, spark, duck):
-    from binancedatapipelineinaws_spark.session import persist_scope
+def _session_state(spark):
+    temp_views = sorted(
+        t.name for t in spark.catalog.listTables() if t.isTemporary
+    )
+    return spark.conf.getAll, temp_views
 
-    spec = SPECS[name]
+
+@pytest.mark.parametrize("name", sorted(SPECS))
+def test_query_matches_oracle(name, spark, duck, monkeypatch):
+    monkeypatch.setattr(check_oracle, "SF_DIR", SF_ORACLE)
+    conf_before, views_before = _session_state(spark)
     # persist_scope: release this id's scoped_persist()-ed frames on
-    # exit so the 316-id serial replica doesn't accumulate cached
-    # blocks across the whole session (ADVICE r12 item 3)
+    # exit so the serial replica doesn't accumulate cached blocks
+    # across the whole session
     with persist_scope():
-        _run_parity(spec, spark, duck)
+        _run_parity(SPECS[name], spark, duck)
+    conf_after, views_after = _session_state(spark)
+    assert conf_after == conf_before, f"{name} changed the session conf"
+    assert views_after == views_before, f"{name} left temp views behind"
 
 
 def _run_parity(spec, spark, duck):
-    sdf = spec.fn(spark, "/root/testdata/sf0.01")
-    srows = [tuple(r) for r in sdf.collect()]
-    if spec.oracle is None:
-        assert len(srows) >= 0  # rows-only check: must run
-        return
-    res = duck.execute(spec.oracle)
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert len(srows) == len(orows), f"rowcount {len(srows)} != {len(orows)}"
-    assert sorted(sdf.columns) == sorted(ocols)
-    ns = normalize(srows, sdf.columns)
-    no = normalize(orows, ocols)
-    ndiff = sum(1 for a, b in zip(ns, no) if a != b)
-    sample = [(a, b) for a, b in zip(ns, no) if a != b][:3]
-    assert ns == no, f"{ndiff}/{len(ns)} rows differ; sample {sample}"
+    status, nrows, msg = check_oracle.run_one(spark, duck, spec.name, spec)
+    assert status in ("OK", "ROWS_ONLY"), f"{status} rows={nrows}: {msg}"

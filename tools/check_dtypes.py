@@ -24,9 +24,6 @@ import duckdb
 sys.path.insert(0, "/root/repo")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 # dtype pairs we accept as hash-equivalent (value repr identical in the
 # driver's canonicalizer).  Everything else is a finding.
@@ -50,6 +47,7 @@ def dtype_findings(name, spark_pdf, duck_pdf):
 def main():
     from binancedatapipelineinaws_spark.registry import all_specs
     from binancedatapipelineinaws_spark.session import get_spark
+    from tools.check_oracle import duck_views
 
     only = set(sys.argv[1:])
     specs = all_specs()
@@ -57,11 +55,7 @@ def main():
         specs = {k: v for k, v in specs.items() if k in only}
 
     spark = get_spark("dtype-check", master="local[8]", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(duckdb.connect(), SF_DIR)
 
     n_clean = n_flagged = n_skip = 0
     for name in sorted(specs):

@@ -25,9 +25,21 @@ import os  # noqa: E402
 # synthetic .bench_sf1 dataset as a testdata-regeneration robustness
 # drill (different value ranges, tie patterns, and row counts).
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+
+from binancedatapipelineinaws_spark.tables import (  # noqa: E402
+    TABLE_NAMES as TABLES,
+)
+
+
+def duck_views(con, sf_dir):
+    """Create one DuckDB view per driver table over ``sf_dir``'s
+    parquet, under the table's own name (what every oracle reads)."""
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):  # Spark-written tables are DIRECTORIES
+            path += "/*.parquet"  # of part files
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
 def norm_cell(v):
@@ -392,13 +404,7 @@ def main():
         # 32 default threads also oversubscribes the host 3-4x — a
         # query that fits its budget solo can blow it in a sweep
         c.execute(f"SET threads TO {max(4, 32 // threads)}")
-        for t in TABLES:
-            c.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet"
-                # Spark-written tables are DIRECTORIES of part files
-                + ("/*.parquet')" if os.path.isdir(f"{SF_DIR}/{t}.parquet") else "')")
-            )
-        return c
+        return duck_views(c, SF_DIR)
 
     def check(name):
         rung = APPROX_RECALL_ABOVE.get(name)

@@ -25,9 +25,6 @@ import pandas as pd
 sys.path.insert(0, "/root/repo")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def canon(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -83,6 +80,7 @@ def frames_equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
 def main():
     from binancedatapipelineinaws_spark.registry import all_specs
     from binancedatapipelineinaws_spark.session import get_spark
+    from tools.check_oracle import duck_views
 
     only = set(sys.argv[1:])
     specs = all_specs()
@@ -90,11 +88,7 @@ def main():
         specs = {k: v for k, v in specs.items() if k in only}
 
     spark = get_spark("pdhash-check", master="local[8]", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(duckdb.connect(), SF_DIR)
 
     n_ok = n_fail = n_skip = 0
     for name in sorted(specs):

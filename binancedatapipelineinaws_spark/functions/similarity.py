@@ -1682,35 +1682,42 @@ COV_SCALE = 1_000_000  # floor-quantization step: 1e-6 resolution
 GRAM_PARTIALS_SCHEMA = "dim_i int, dim_j int, v long"
 
 
-def gram_partials(batches):
-    """Per-partition covariance partials: ONE int64 Gram mat-mul over
-    the partition's floor-quantized vectors, emitted as a constant
-    DIM*(DIM-1)/2 + DIM + 1 rows — upper-triangle products, per-dim
-    sums, and the row count.  Module-level (not a closure) so the
-    shuffle-volume contract is testable in isolation
+def make_gram_partials():
+    """Build the per-partition covariance kernel: ONE int64 Gram
+    mat-mul over the partition's floor-quantized vectors, emitted as a
+    constant DIM*(DIM-1)/2 + DIM + 1 rows — upper-triangle products,
+    per-dim sums, and the row count.  A closure, so cloudpickle
+    serializes it BY VALUE and Spark's Python workers need not import
+    this package (the driver may launch from any CWD); a factory, so
+    the shuffle-volume contract is testable in isolation
     (tests/test_scaling.py)."""
-    import numpy as np
-    import pandas as pd
+    dim, scale = DIM, COV_SCALE  # closure-local: pickled by value
 
-    g = np.zeros((DIM, DIM), dtype=np.int64)
-    s1 = np.zeros(DIM, dtype=np.int64)
-    n = 0
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        q = np.floor(x * COV_SCALE).astype(np.int64)
-        g += q.T @ q
-        s1 += q.sum(axis=0)
-        n += q.shape[0]
-    iu, ju = np.triu_indices(DIM, k=1)
-    yield pd.DataFrame(
-        {
-            "dim_i": np.concatenate([iu, np.arange(DIM), [-1]]),
-            "dim_j": np.concatenate([ju, np.full(DIM, -1), [-1]]),
-            "v": np.concatenate([g[iu, ju], s1, [n]]),
-        }
-    )
+    def gram_partials(batches):
+        import numpy as np
+        import pandas as pd
+
+        g = np.zeros((dim, dim), dtype=np.int64)
+        s1 = np.zeros(dim, dtype=np.int64)
+        n = 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            q = np.floor(x * scale).astype(np.int64)
+            g += q.T @ q
+            s1 += q.sum(axis=0)
+            n += q.shape[0]
+        iu, ju = np.triu_indices(dim, k=1)
+        yield pd.DataFrame(
+            {
+                "dim_i": np.concatenate([iu, np.arange(dim), [-1]]),
+                "dim_j": np.concatenate([ju, np.full(dim, -1), [-1]]),
+                "v": np.concatenate([g[iu, ju], s1, [n]]),
+            }
+        )
+
+    return gram_partials
 
 
 @register(
@@ -1770,7 +1777,7 @@ def q_ext_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition, 100x above a 128 MB split."""
     emb = load_table(spark, sf_dir, "embeddings")
     partials = emb.select("embedding").mapInPandas(
-        gram_partials, schema=GRAM_PARTIALS_SCHEMA
+        make_gram_partials(), schema=GRAM_PARTIALS_SCHEMA
     )
     tot = partials.groupBy("dim_i", "dim_j").agg(
         F.sum(F.col("v").cast("decimal(38,0)")).alias("v")

@@ -34,15 +34,22 @@ _SESSION_CONTRACT = {
 }
 
 
-def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
-    """About 60% of physical memory, capped at 24g (24g when
-    ``MemTotal`` can't be read)."""
+def mem_total_kb(meminfo: str = "/proc/meminfo") -> int | None:
+    """Physical memory in KiB (``MemTotal``), or None when unreadable."""
     try:
         with open(meminfo) as fh:
-            kb = next(
+            return next(
                 int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:")
             )
     except (OSError, StopIteration, ValueError, IndexError):
+        return None
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """About 60% of physical memory, capped at 24g (24g when
+    ``MemTotal`` can't be read)."""
+    kb = mem_total_kb(meminfo)
+    if kb is None:
         return "24g"
     return f"{min(24 * 1024, kb * 6 // 10240)}m"
 

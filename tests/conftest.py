@@ -1,11 +1,15 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests live in, first on the path: a copy of the
+# tree tests its own engine
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from binancedatapipelineinaws_spark.session import get_spark  # noqa: E402
 from tools.check_oracle import duck_views  # noqa: E402

@@ -2,11 +2,14 @@ from __future__ import annotations
 
 import dataclasses
 import importlib.util
+import os
+
+from conftest import REPO
 
 
 def _load_entry_module():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

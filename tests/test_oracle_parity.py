@@ -1,6 +1,6 @@
 """Replicates the driver's correctness gate: every registered query with
-an oracle must match DuckDB on row count, column names, and
-order-insensitive values at sf0.01, through the gate's own compare
+an oracle must pass the gate's value, pandas-hash and dtype verdicts
+against DuckDB at sf0.01, through the gate's own per-id pass
 (``tools.check_oracle.run_one``).
 
 Each id must also leave the session as it found it: the same runtime
@@ -16,7 +16,6 @@ import pytest
 from conftest import SF_ORACLE
 
 from binancedatapipelineinaws_spark.registry import all_specs
-from binancedatapipelineinaws_spark.session import persist_scope
 from tools import check_oracle
 
 SPECS = all_specs()
@@ -33,11 +32,7 @@ def _session_state(spark):
 def test_query_matches_oracle(name, spark, duck, monkeypatch):
     monkeypatch.setattr(check_oracle, "SF_DIR", SF_ORACLE)
     conf_before, views_before = _session_state(spark)
-    # persist_scope: release this id's scoped_persist()-ed frames on
-    # exit so the serial replica doesn't accumulate cached blocks
-    # across the whole session
-    with persist_scope():
-        _run_parity(SPECS[name], spark, duck)
+    _run_parity(SPECS[name], spark, duck)
     conf_after, views_after = _session_state(spark)
     assert conf_after == conf_before, f"{name} changed the session conf"
     assert views_after == views_before, f"{name} left temp views behind"

@@ -383,7 +383,7 @@ def test_covariance_partials_constant_per_partition(spark):
     from binancedatapipelineinaws_spark.functions.similarity import (
         DIM,
         GRAM_PARTIALS_SCHEMA,
-        gram_partials,
+        make_gram_partials,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("embedding")
@@ -392,7 +392,7 @@ def test_covariance_partials_constant_per_partition(spark):
     for parts in (1, 4, 16):
         partials = (
             emb.repartition(parts)
-            .mapInPandas(gram_partials, schema=GRAM_PARTIALS_SCHEMA)
+            .mapInPandas(make_gram_partials(), schema=GRAM_PARTIALS_SCHEMA)
             .cache()
         )
         # constant rows per partition: total emitted = partitions * 2081
@@ -406,6 +406,53 @@ def test_covariance_partials_constant_per_partition(spark):
         }
         partials.unpersist()
     assert totals[1] == totals[4] == totals[16]
+
+
+_COVARIANCE_OUTSIDE_CHECKOUT = """
+import importlib.util, sys
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[2]").config(
+    "spark.driver.memory", "1g").getOrCreate()
+spec = importlib.util.spec_from_file_location("__spark_entry__", sys.argv[1])
+mod = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(mod)
+rows = mod.queries()["q_ext_embed_covariance"](spark, sys.argv[2]).collect()
+print("rows", len(rows))
+spark.stop()
+"""
+
+
+def test_covariance_runs_outside_the_checkout(tmp_path):
+    """A driver started elsewhere loads ``__spark_entry__.py`` by path;
+    only its own process has the checkout on sys.path, so the Gram
+    kernel must reach the Python workers by value, not by import."""
+    import os
+    import subprocess
+    import sys
+
+    from conftest import REPO
+
+    from binancedatapipelineinaws_spark.functions.similarity import (
+        COV_TOP_PAIRS,
+    )
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _COVARIANCE_OUTSIDE_CHECKOUT,
+            os.path.join(REPO, "__spark_entry__.py"),
+            SF,
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert f"rows {COV_TOP_PAIRS}" in out.stdout
 
 
 def test_copurchase_edge_volume_linear_in_baskets(spark):

@@ -1,31 +1,48 @@
 """Local replica of the driver's correctness gate.
 
-Runs every registered query at sf0.01 on Spark AND its DuckDB oracle,
-then compares row count, column-name set, and an order-insensitive
-value comparison (columns aligned by sorted name, rows sorted).
+Runs every registered query on Spark AND its DuckDB oracle, each once,
+over the sf0.01 tables, and gives three verdicts per id.  An id is OK
+only when all three pass:
+
+- value: row count, column-name set, and an order-insensitive compare
+  of the collected values (columns aligned by sorted name, rows
+  sorted);
+- hash: the driver's own compare, run on both results after they are
+  turned into pandas (``canon`` then ``frames_equal``);
+- dtype: every column's (Spark, DuckDB) pandas dtype pair is equal or
+  listed in ``SAFE_DTYPE_PAIRS``.
 
 Usage:
     python tools/check_oracle.py            # all queries
     python tools/check_oracle.py q_join_inner q_agg_count
+    python tools/check_oracle.py --threads 4       # overlap ids (sweeps)
+    python tools/check_oracle.py --fast-compare    # vectorized value compare
+
+``SPARK_GRAFT_ORACLE_SF_DIR`` points the gate at another corpus.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
+from contextlib import contextmanager
 from datetime import date, datetime
 
 import duckdb
+import numpy as np
+import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import os  # noqa: E402
-
-# Overridable so the sweep can run against other corpora — e.g. the
-# synthetic .bench_sf1 dataset as a testdata-regeneration robustness
-# drill (different value ranges, tie patterns, and row counts).
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
+from binancedatapipelineinaws_spark.session import (  # noqa: E402
+    mem_total_kb,
+    persist_scope,
+    scoped_persist,
+)
 from binancedatapipelineinaws_spark.tables import (  # noqa: E402
     TABLE_NAMES as TABLES,
 )
@@ -77,8 +94,6 @@ def _fast_normalize_pair(s_col, o_col):
     pair is outside the supported set (strings, dates-as-objects,
     decimals, nullable extension arrays) — caller falls back to the
     classic path."""
-    import numpy as np
-    import pandas as pd
 
     def norm(s):
         dt = s.dtype
@@ -127,8 +142,6 @@ def fast_compare(spdf, oddf, samples_out=None):
     mismatching (column, spark_raw, oracle_raw) samples are appended
     to samples_out when provided (for sweeps too large to
     re-adjudicate classically)."""
-    import numpy as np
-
     cols = sorted(spdf.columns)
     s_arrs, o_arrs = [], []
     for c in cols:
@@ -159,19 +172,10 @@ def fast_compare(spdf, oddf, samples_out=None):
 FAST_FAIL_READJUDICATE_MAX = 5_000_000
 
 
-def run_one_fast(spark, con, name, spec):
-    """Arrow/vectorized variant of run_one for big-corpus sweeps.
-    Returns None when the classic path must decide (no oracle,
-    complex/unsupported dtypes, or a sub-threshold mismatch)."""
-    sdf = spec.fn(spark, SF_DIR)
-    if spec.oracle is None or any(
-        f.dataType.typeName() in ("array", "map", "struct")
-        for f in sdf.schema.fields
-    ):
-        return None
-    spdf = sdf.toPandas()
-    ores = con.execute(spec.oracle)
-    oddf = ores.df()
+def _fast_value(spdf, oddf):
+    """Value problems from the vectorized compare of the two pandas
+    frames ([] when equal), or None when the classic path must decide
+    (unsupported dtypes, or a sub-threshold mismatch)."""
     problems = []
     if len(spdf) != len(oddf):
         problems.append(f"rowcount spark={len(spdf)} oracle={len(oddf)}")
@@ -180,46 +184,21 @@ def run_one_fast(spark, con, name, spec):
             f"cols spark={sorted(spdf.columns)} oracle={sorted(oddf.columns)}"
         )
     if problems:
-        return ("FAIL", len(spdf), "; ".join(problems))
+        return problems
     samples = []
     eq = fast_compare(spdf, oddf, samples_out=samples)
     if eq is True:
-        return ("OK", len(spdf), None)
+        return []
     if eq is False and len(spdf) > FAST_FAIL_READJUDICATE_MAX:
-        return (
-            "FAIL",
-            len(spdf),
+        return [
             "values differ (bitwise, fast path; too large for classic "
-            "re-adjudication); " + " | ".join(samples),
-        )
-    return None  # classic path decides (and prints samples)
+            "re-adjudication); " + " | ".join(samples)
+        ]
+    return None
 
 
-def run_one(spark, con, name, spec, verbose=False):
-    sdf = spec.fn(spark, SF_DIR)
-    # Driver-compat guard: the driver canonicalizes with pandas
-    # sort_values, which cannot hash array/map/struct cells (this ERR'd
-    # three queries in round 1). Any complex-typed output column is a
-    # hard failure here even though this script's own compare handles it.
-    complex_cols = [
-        f.name
-        for f in sdf.schema.fields
-        if f.dataType.typeName() in ("array", "map", "struct")
-    ]
-    if complex_cols:
-        return (
-            "FAIL",
-            -1,
-            f"driver-unsafe complex output columns: {complex_cols} "
-            "(serialize with to_json/array_join)",
-        )
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    if spec.oracle is None:
-        return ("ROWS_ONLY", len(srows), None)
-    ores = con.execute(spec.oracle)
-    ocols = [d[0] for d in ores.description]
-    orows = ores.fetchall()
+def _value(srows, scols, orows, ocols, verbose=False):
+    """The value verdict's problems ([] when the results match)."""
     problems = []
     if len(srows) != len(orows):
         problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
@@ -243,9 +222,164 @@ def run_one(spark, con, name, spec, verbose=False):
             if verbose:
                 for s in samples:
                     print(f"    {s}")
-    if problems:
-        return ("FAIL", len(srows), "; ".join(problems))
-    return ("OK", len(srows), None)
+    return problems
+
+
+def canon(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Driver-style canonical form: columns sorted by name, rows sorted
+    by all columns, index dropped.  Numeric/datetime columns are
+    widened to one common representation per family so the compare
+    tests VALUES (the driver's empirically-safe pairs: int32-vs-int64,
+    datetime64[ns]-vs-[us]) while int-vs-float stays a mismatch."""
+    out = {}
+    for c in sorted(pdf.columns):
+        s = pdf[c]
+        if pd.api.types.is_bool_dtype(s):
+            out[c] = s.astype("int64")
+        elif pd.api.types.is_integer_dtype(s):
+            out[c] = s.astype("int64")
+        elif pd.api.types.is_float_dtype(s):
+            out[c] = s.astype("float64")
+        elif pd.api.types.is_datetime64_any_dtype(s):
+            out[c] = s.astype("datetime64[ns]")
+        elif len(s) and s.map(lambda v: v is None or hasattr(v, "toordinal")).all():
+            # object column of datetime.date: the driver's canonicalizer
+            # empirically hashes these equal to datetime64 (q_fn_cast /
+            # q_fn_datetime passed r01 with exactly this pairing), so
+            # align to the datetime64 family before comparing
+            out[c] = pd.to_datetime(s).astype("datetime64[ns]")
+        else:
+            # object: normalize None/NaN to a sentinel, rest to str
+            out[c] = s.map(
+                lambda v: "<NULL>" if v is None or (isinstance(v, float) and np.isnan(v)) else str(v)
+            )
+    res = pd.DataFrame(out)
+    if len(res):
+        res = res.sort_values(by=list(res.columns), kind="mergesort").reset_index(
+            drop=True
+        )
+    return res
+
+
+def frames_equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
+    if list(a.columns) != list(b.columns) or len(a) != len(b):
+        return False
+    for c in a.columns:
+        x, y = a[c], b[c]
+        if pd.api.types.is_float_dtype(x) and pd.api.types.is_float_dtype(y):
+            if not np.array_equal(x.to_numpy(), y.to_numpy(), equal_nan=True):
+                return False
+        else:
+            if x.dtype != y.dtype or not x.equals(y):
+                return False
+    return True
+
+
+def _hash(spdf, oddf):
+    """The pandas-hash verdict's problem, or None when it passes."""
+    a, b = canon(spdf), canon(oddf)
+    if frames_equal(a, b):
+        return None
+    bad = [
+        c for c in a.columns
+        if c in b.columns and not frames_equal(a[[c]], b[[c]])
+    ]
+    head = "".join(
+        f" | {c}: spark={a[c].head(3).tolist()} duck={b[c].head(3).tolist()}"
+        for c in bad[:3]
+    )
+    return f"pandas hash differs in columns {bad}{head}"
+
+
+# (Spark, DuckDB) pandas dtype pairs that hash equal in the driver's
+# compare, each mapped to its evidence bullet under "Pandas dtype
+# parity" in .claude/skills/verify/SKILL.md.  Any other differing pair
+# fails the dtype verdict.  Never widen this table to get a pass.
+SAFE_DTYPE_PAIRS = {
+    ("datetime64[ns]", "datetime64[us]"): "datetime64[ns]-vs-[us]",
+    ("int32", "int64"): "int32-vs-int64",
+    ("object", "datetime64[us]"): "date-object-vs-datetime64",
+    ("int32", "int8"): "int32-vs-int8",
+    ("int64", "int32"): "int64-vs-int32",
+}
+
+
+def _dtype(spdf, oddf):
+    """The dtype verdict's problem, or None when it passes."""
+    bad = []
+    for c in sorted(spdf.columns):
+        pair = (str(spdf[c].dtype), str(oddf[c].dtype))
+        if pair[0] != pair[1] and pair not in SAFE_DTYPE_PAIRS:
+            bad.append(f"{c}: spark={pair[0]} duck={pair[1]}")
+    return f"dtype pairs not in SAFE_DTYPE_PAIRS: {bad}" if bad else None
+
+
+_ORACLE_TABLE = "gate_oracle_result"
+
+
+@contextmanager
+def _oracle_result(con, sql):
+    """Run the oracle once, into a temp table that the value and pandas
+    verdicts both read (a DuckDB result can be fetched only once)."""
+    con.execute(f"CREATE OR REPLACE TEMP TABLE {_ORACLE_TABLE} AS\n{sql}\n")
+    try:
+        yield f"SELECT * FROM {_ORACLE_TABLE}"
+    finally:
+        con.execute(f"DROP TABLE IF EXISTS {_ORACLE_TABLE}")
+
+
+def _check(spark, con, spec, fast=False, verbose=False):
+    """Run one id once on each side: (status, nrows, problems), where
+    problems maps each failed verdict (value, hash, dtype) to what
+    failed.  The Spark result is persisted for its two reads (collect
+    and toPandas) and released, with every frame the builder persisted,
+    before this returns."""
+    with persist_scope():
+        sdf = spec.fn(spark, SF_DIR)
+        # Driver-compat guard: the driver canonicalizes with pandas
+        # sort_values, which cannot hash array/map/struct cells (this
+        # ERR'd three queries in round 1). Any complex-typed output
+        # column is a hard failure here even though the value compare
+        # handles it.
+        complex_cols = [
+            f.name
+            for f in sdf.schema.fields
+            if f.dataType.typeName() in ("array", "map", "struct")
+        ]
+        if complex_cols:
+            return (
+                "FAIL",
+                -1,
+                {"hash": f"driver-unsafe complex output columns: {complex_cols} "
+                 "(serialize with to_json/array_join)"},
+            )
+        if spec.oracle is None:
+            return ("ROWS_ONLY", len(sdf.collect()), {})
+        sdf = scoped_persist(sdf)
+        spdf = sdf.toPandas()
+        with _oracle_result(con, spec.oracle) as oracle:
+            oddf = con.execute(oracle).df()
+            value = _fast_value(spdf, oddf) if fast else None
+            if value is None:
+                srows = [tuple(r) for r in sdf.collect()]
+                ores = con.execute(oracle)
+                ocols = [d[0] for d in ores.description]
+                value = _value(srows, sdf.columns, ores.fetchall(), ocols, verbose)
+    problems = {"value": "; ".join(value)} if value else {}
+    if sorted(spdf.columns) == sorted(oddf.columns):
+        for verdict, problem in (
+            ("hash", _hash(spdf, oddf)),
+            ("dtype", _dtype(spdf, oddf)),
+        ):
+            if problem:
+                problems[verdict] = problem
+    return ("FAIL" if problems else "OK", len(spdf), problems)
+
+
+def run_one(spark, con, name, spec, verbose=False):
+    """The gate for one id: ("OK" | "FAIL" | "ROWS_ONLY", rows, message)."""
+    status, nrows, problems = _check(spark, con, spec, verbose=verbose)
+    return (status, nrows, "; ".join(problems.values()) or None)
 
 
 # Queries whose Spark path switches to an approximate-recall candidate
@@ -293,10 +427,7 @@ def _recall_fixture(n_rows: int):
         return _FIXTURE_CACHE[key]
     import json
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tests", "fixtures", f"recall_gt_{n_rows}.json",
-    )
+    path = os.path.join(ROOT, "tests", "fixtures", f"recall_gt_{n_rows}.json")
     fx = None
     if os.path.exists(path):
         with open(path) as f:
@@ -352,6 +483,20 @@ def _fixture_check(spark, name, spec, fx):
     )
 
 
+def duck_budget(workers: int, meminfo: str = "/proc/meminfo"):
+    """(memory_limit, threads) for each of ``workers`` concurrent DuckDB
+    connections: together they get a quarter of ``MemTotal`` (the
+    Spark driver heap takes 60%; 16 GiB assumed when unreadable) and
+    the CPUs this process may run on."""
+    kb = mem_total_kb(meminfo) or 16 * 1024 * 1024
+    mem_mb = max(256, kb // 4 // workers // 1024)
+    threads = max(1, len(os.sched_getaffinity(0)) // workers)
+    return f"{mem_mb}MB", threads
+
+
+VERDICTS = ("value", "hash", "dtype")
+
+
 def main():
     from binancedatapipelineinaws_spark.registry import all_specs
     from binancedatapipelineinaws_spark.session import get_spark
@@ -383,15 +528,14 @@ def main():
     # spill directory.  Two r9 sf10 post-mortems drove this: with one
     # shared in-memory database (a) the default memory_limit is 80% of
     # PHYSICAL RAM and nothing spills, which OOM-cascaded next to the
-    # 24g Spark JVM and then hard-wedged all threads in futex wait;
-    # (b) even WITH a shared 40GB limit, one huge query exhausts the
-    # pool and every later allocation in every thread fails ("bad
-    # allocation" at 4KB blocks) — exhaustion is sticky.  A fresh
-    # connection per query costs ~ms, isolates failure to the query
-    # that caused it, and releases everything at close.
-    duck_mem = os.environ.get(
-        "SPARK_GRAFT_DUCK_MEM", f"{max(8, 48 // threads)}GB"
-    )
+    # Spark JVM and then hard-wedged all threads in futex wait; (b) even
+    # WITH a shared limit, one huge query exhausts the pool and every
+    # later allocation in every thread fails ("bad allocation" at 4KB
+    # blocks) — exhaustion is sticky.  A fresh connection per query
+    # costs ~ms, isolates failure to the query that caused it, and
+    # releases everything at close.  Per-query peak memory scales with
+    # DuckDB's thread count, so both come from one host-derived budget.
+    duck_mem, duck_threads = duck_budget(threads)
     duck_tmp = os.environ.get("SPARK_GRAFT_DUCK_TMP", "/tmp/duckdb_spill")
     os.makedirs(duck_tmp, exist_ok=True)
 
@@ -399,14 +543,11 @@ def main():
         c = duckdb.connect()
         c.execute(f"SET memory_limit='{duck_mem}'")
         c.execute(f"SET temp_directory='{duck_tmp}'")
-        # per-query peak memory scales with DuckDB's thread count
-        # (per-thread operator state), and N concurrent connections x
-        # 32 default threads also oversubscribes the host 3-4x — a
-        # query that fits its budget solo can blow it in a sweep
-        c.execute(f"SET threads TO {max(4, 32 // threads)}")
+        c.execute(f"SET threads TO {duck_threads}")
         return duck_views(c, SF_DIR)
 
     def check(name):
+        """(name, status, nrows, problems) for one id."""
         rung = APPROX_RECALL_ABOVE.get(name)
         cur = duck_connect()
         try:
@@ -414,60 +555,30 @@ def main():
                 n_corpus := _corpus_rows(cur, rung[0])
             ) > rung[1]:
                 fx = _recall_fixture(n_corpus)
-                if fx is not None and name in fx:
-                    try:
-                        status, nrows, msg = _fixture_check(
-                            spark, name, specs[name], fx
-                        )
-                    except Exception as e:  # noqa: BLE001
-                        status, nrows, msg = (
-                            "ERROR", -1,
-                            f"{type(e).__name__}: {str(e)[:300]}",
-                        )
-                    return (name, status, nrows, msg)
-                return (
-                    name,
-                    "SKIP",
-                    -1,
-                    f"corpus {rung[0]} exceeds exact-path rung "
-                    f"({rung[1]} rows) and no ground-truth fixture "
-                    "matches this corpus: Spark uses approx-recall "
-                    "candidates, oracle is exact — compare not "
-                    "meaningful at this size",
-                )
-            try:
-                # persist_scope (session.py, ADVICE r12 item 3): every
-                # frame the builder scoped_persist()-ed is unpersisted
-                # when this id's compare completes, so a 30-id sweep
-                # chunk in one session cannot accumulate cached blocks.
-                # Thread-local, so the 4-way pool can't release a
-                # sibling id's in-flight cache.
-                from binancedatapipelineinaws_spark.session import (
-                    persist_scope,
-                )
-
-                res = None
+                if fx is None or name not in fx:
+                    return (
+                        name,
+                        "SKIP",
+                        -1,
+                        {"skip": f"corpus {rung[0]} exceeds exact-path rung "
+                         f"({rung[1]} rows) and no ground-truth fixture "
+                         "matches this corpus: Spark uses approx-recall "
+                         "candidates, oracle is exact — compare not "
+                         "meaningful at this size"},
+                    )
                 with persist_scope():
-                    if fast:
-                        # vectorized Arrow path; a None result (no
-                        # oracle, unsupported dtypes, or a
-                        # sub-threshold mismatch) falls through to the
-                        # authoritative classic path
-                        res = run_one_fast(spark, cur, name, specs[name])
-                    if res is not None:
-                        status, nrows, msg = res
-                    else:
-                        status, nrows, msg = run_one(
-                            spark, cur, name, specs[name],
-                            verbose=(threads == 1),
-                        )
-            except Exception as e:  # noqa: BLE001
-                status, nrows, msg = (
-                    "ERROR",
-                    -1,
-                    f"{type(e).__name__}: {str(e)[:300]}",
-                )
-            return (name, status, nrows, msg)
+                    status, nrows, msg = _fixture_check(
+                        spark, name, specs[name], fx
+                    )
+                return (name, status, nrows, {"value": msg})
+            return (name, *_check(
+                spark, cur, specs[name], fast=fast, verbose=(threads == 1)
+            ))
+        except Exception as e:  # noqa: BLE001
+            return (
+                name, "ERROR", -1,
+                {"error": f"{type(e).__name__}: {str(e)[:300]}"},
+            )
         finally:
             cur.close()
 
@@ -479,34 +590,44 @@ def main():
             _print_result(res)
             results.append(res)
     else:
-        from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import ThreadPoolExecutor, as_completed
 
         with ThreadPoolExecutor(max_workers=threads) as pool:
             futs = {pool.submit(check, n): n for n in names}
             done = {}
-            from concurrent.futures import as_completed
-
             for fut in as_completed(futs):
                 res = fut.result()
                 _print_result(res)
                 done[res[0]] = res
         results = [done[n] for n in names]
 
-    n_ok = sum(1 for r in results if r[1] in ("OK", "ROWS_ONLY"))
-    n_skip = sum(1 for r in results if r[1] == "SKIP")
-    n_fail = len(results) - n_ok - n_skip
+    passed = ("OK", "ROWS_ONLY")
+    checked = [r for r in results if r[1] != "SKIP"]
+    n_ok = sum(1 for r in checked if r[1] in passed)
+    n_skip = len(results) - len(checked)
+    n_fail = len(checked) - n_ok
+
+    def passes(res, verdict):
+        return res[1] in passed or (res[1] == "FAIL" and verdict not in res[3])
+
+    per_verdict = ", ".join(
+        f"{v} {sum(passes(r, v) for r in checked)}/{len(checked)}"
+        for v in VERDICTS
+    )
     print(
         f"\n{n_ok} ok, {n_fail} failing"
         + (f", {n_skip} skipped (approx-recall rung)" if n_skip else "")
+        + f" (ok per verdict: {per_verdict})"
     )
     sys.exit(1 if n_fail else 0)
 
 
 def _print_result(res):
-    name, status, nrows, msg = res
+    name, status, nrows, problems = res
     tag = {"OK": "ok", "ROWS_ONLY": "ok(rows-only)", "SKIP": "SKIP"}.get(
         status, status
     )
+    msg = "; ".join(f"{k}: {v}" for k, v in problems.items())
     print(f"{name:28s} {tag:14s} rows={nrows}" + (f"  {msg}" if msg else ""))
 
 

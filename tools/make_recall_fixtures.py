@@ -30,7 +30,7 @@ Exactness notes (engine-replication fidelity):
   elementwise IEEE arithmetic — identical in numpy by construction.
 
 Usage: python tools/make_recall_fixtures.py [sf_dir]
-       (default /root/repo/.bench_sf10)
+       (default <checkout>/.bench_sf10)
 """
 
 from __future__ import annotations

@@ -212,7 +212,6 @@ def minute_file_sink(
     canonical: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """EP1 parity: per-minute TSV output.  The reference names files by
     the minute's epoch second (main.py:40-41); here the minute bucket is
@@ -224,37 +223,34 @@ def minute_file_sink(
         "minute_epoch_s",
         (F.unix_timestamp(F.to_timestamp("time")) / 60).cast("long") * 60,
     )
-    writer = (
+    return (
         partitioned.writeStream.format("csv")
         .option("sep", "\t")
         .option("checkpointLocation", checkpoint_dir)
         .option("path", out_dir)
         .partitionBy("minute_epoch_s")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def table_append_sink(
     canonical: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """EP2 parity: continuous bulk append into the engine's table
     (parquet), replacing LOAD DATA FROM S3 — exactly-once through the
     checkpoint + commit log instead of the non-idempotent Lambda."""
-    writer = (
+    return (
         canonical.writeStream.format("parquet")
         .option("checkpointLocation", checkpoint_dir)
         .option("path", table_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def upsert_table_sink(
@@ -262,7 +258,6 @@ def upsert_table_sink(
     table_dir: str,
     checkpoint_dir: str,
     key_col: str = "bid",
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming CDC compaction: each micro-batch MERGES into the table
     with latest-wins semantics on `key_col` (a replayed/corrected trade
@@ -315,14 +310,13 @@ def upsert_table_sink(
         merged.write.mode("overwrite").parquet(tmp_dir)
         _publish(tmp_dir, table_dir, batch_id)
 
-    writer = (
+    return (
         canonical.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ohlcv_stream(
@@ -571,7 +565,6 @@ def merge_state_sink(
     events: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming MERGE INTO with ACCUMULATE semantics — the stream twin
     of the batch operator `operators/cdc.q_ext_merge_into`.  Each
@@ -673,11 +666,10 @@ def merge_state_sink(
             f.write(str(batch_id))
         _publish(tmp_dir, table_dir, batch_id)
 
-    writer = (
+    return (
         events.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

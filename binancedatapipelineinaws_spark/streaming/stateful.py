@@ -1,17 +1,32 @@
-"""Custom stateful streaming operator via applyInPandasWithState
-(SURVEY.md §2.8/§2.9): a per-key file-rotation detector that reproduces
-the reference's upload-on-rotation semantics (main.py:36-47) as an
-explicit state machine.
+"""Keyed-state streams via applyInPandasWithState (SURVEY.md §2.8/§2.9).
 
-The reference keeps one mutable variable (`active_file_time`) and closes
-a file whenever a trade lands in a different minute (main.py:38).  Here
-the same logic is per-group state in the state store: for each symbol we
-track the open minute bucket and its running (trades, volume); when a
-tick for a LATER bucket arrives, the closed bucket is EMITTED — exactly
-the reference's rotation event, but fault-tolerant (state survives
-restarts via the checkpoint) and per-key parallel.
+The reference keeps one piece of streaming state, `active_file_time`,
+and closes a minute file whenever a trade lands in a later minute
+(main.py:36-47).  `rotation_stream` is that detector as per-symbol
+state in the state store: fault-tolerant (state survives restarts via
+the checkpoint) and per-key parallel.  The other eleven streams are
+keyed-state twins of batch queries: sessionizer, gap bands,
+attribution, SpaceSaving, EWMA, Holt, MACD, SAR, Supertrend, sentence
+frequency and perplexity buckets.
 
-Kernels are closures (pickled by value) like every Python kernel in this
+Every stream is one `_keyed_fold`.  A kernel is only its fold body,
+`fold(key, state, batch) -> (state, rows)`; the scaffold loads the
+key's state (or the kernel's `init`), hands the fold the key's whole
+micro-batch as one sorted frame, stores the new state and emits the
+rows.
+
+Chunking: `applyInPandasWithState` yields one pandas chunk per Arrow
+batch, so a key whose micro-batch exceeds
+`spark.sql.execution.arrow.maxRecordsPerBatch` arrives as SEVERAL
+chunks whose composition depends on shuffle arrival order.  A fold
+over each chunk would see an order (sorted(chunk1) ++ sorted(chunk2))
+or a partial group that varies run to run, which breaks replay
+determinism for order-sensitive state.  The scaffold therefore
+concatenates the chunks and sorts the whole batch ONCE by the kernel's
+`sort_cols`, which must fix every order the fold depends on (float
+summation order included).
+
+Folds are closures (pickled by value) like every Python kernel in this
 engine.
 """
 
@@ -26,56 +41,101 @@ ROTATION_SCHEMA = (
 STATE_SCHEMA = "minute_epoch_s long, trades long, volume double"
 
 
-# NOTE on chunking: `pdfs` yields one pandas chunk per Arrow batch; a
-# key whose micro-batch exceeds arrow.maxRecordsPerBatch arrives as
-# SEVERAL chunks whose composition depends on shuffle arrival order.
-# Every kernel below therefore concatenates its chunks and sorts ONCE
-# — a per-chunk sort would give sorted(chunk1)++sorted(chunk2), an
-# order that varies run to run and breaks replay determinism for
-# order-sensitive state.
+def _keyed_fold(
+    keyed: DataFrame,
+    keys: list[str],
+    fold,
+    init: tuple,
+    sort_cols: list[str],
+    out_schema: str,
+    state_schema: str,
+    mode: str = "append",
+) -> DataFrame:
+    """`keyed` grouped by `keys`, each key's micro-batch folded into
+    its state by `fold(key, state, batch) -> (state, rows)`.
 
+    `batch` is the key's whole micro-batch, sorted by `sort_cols`;
+    `state` is the stored tuple (field order of `state_schema`) or
+    `init` for a new key; `rows` are tuples in `out_schema` column
+    order.  `mode` is the output mode: the two streams that re-emit a
+    key's whole table every batch run in "update", the rest append.
+    """
+    cols = [field.split()[0] for field in out_schema.split(",")]
 
-def make_rotation_fn():
-    def detect_rotation(key, pdfs, state):
-        # state: (open minute bucket, trades, volume) for this symbol
+    def run(key, pdfs, state):
         import pandas as pd
 
-        (symbol,) = key
-        if state.exists:
-            open_min, trades, volume = state.get
-        else:
-            open_min, trades, volume = None, 0, 0.0
-        closed: list[tuple[str, int, int, float]] = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values(["minute_epoch_s", "bid"])
-            for minute, grp in batch.groupby("minute_epoch_s", sort=True):
-                if open_min is None:
-                    open_min = int(minute)
-                elif minute > open_min:
-                    # rotation: the open minute closes (main.py:38-43)
-                    closed.append((symbol, open_min, trades, volume))
-                    open_min, trades, volume = int(minute), 0, 0.0
-                elif minute < open_min:
-                    # late data: the reference would corrupt the closed
-                    # file (main.py:44); we drop — documented divergence
-                    continue
-                trades += int(len(grp))
-                volume += float(grp["quantity"].sum())
-        state.update((open_min, trades, volume))
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=["parameter", "minute_epoch_s", "trades", "volume"],
-            )
+        # without timeouts Spark calls a key only when the micro-batch
+        # holds rows for it, so at least one chunk is non-empty
+        batch = pd.concat([c for c in pdfs if len(c)]).sort_values(sort_cols)
+        new_state, rows = fold(key, state.get if state.exists else init, batch)
+        state.update(new_state)
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
 
-    return detect_rotation
+    return keyed.groupBy(*keys).applyInPandasWithState(
+        run,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _events_keyed(events: DataFrame) -> DataFrame:
+    """The projection every events-keyed stream reads.  `ts_us` is the
+    event time at full microsecond precision: the batch queries order
+    by (ts, event_id) with sub-second ts, so the folds sort by
+    (ts_us, event_id); a second-truncated sort key could order
+    same-second events differently."""
+    from pyspark.sql import functions as F
+
+    return events.select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.col("value").cast("double").alias("value"),
+        F.unix_micros("ts").alias("ts_us"),
+    )
+
+
+def _candles_by_day(candles: DataFrame, *cents: str) -> DataFrame:
+    """Candle stream -> (m timestamp, day, the named cents columns as
+    long), keyed by the session day."""
+    from pyspark.sql import functions as F
+
+    return candles.select(
+        F.col("m").cast("timestamp").alias("m"),
+        F.col("m").cast("date").alias("day"),
+        *[F.col(c).cast("long").alias(c) for c in cents],
+    )
 
 
 def rotation_stream(canonical: DataFrame) -> DataFrame:
     """canonical tick stream -> stream of CLOSED minute buckets
-    (the reference's per-minute upload events)."""
+    (the reference's per-minute upload events).  State per symbol:
+    the open minute bucket and its running (trades, volume); a tick
+    for a LATER bucket emits the closed one."""
     from pyspark.sql import functions as F
+
+    def fold(key, state, batch):
+        (symbol,) = key
+        open_min, trades, volume = state
+        closed: list[tuple[str, int, int, float]] = []
+        for minute, grp in batch.groupby("minute_epoch_s", sort=True):
+            if open_min is None:
+                open_min = int(minute)
+            elif minute > open_min:
+                # rotation: the open minute closes (main.py:38-43)
+                closed.append((symbol, open_min, trades, volume))
+                open_min, trades, volume = int(minute), 0, 0.0
+            elif minute < open_min:
+                # late data: the reference would corrupt the closed
+                # file (main.py:44); we drop — documented divergence
+                continue
+            trades += int(len(grp))
+            volume += float(grp["quantity"].sum())
+        return (open_min, trades, volume), closed
 
     keyed = canonical.select(
         "parameter",
@@ -85,12 +145,14 @@ def rotation_stream(canonical: DataFrame) -> DataFrame:
             "minute_epoch_s"
         ),
     )
-    return keyed.groupBy("parameter").applyInPandasWithState(
-        make_rotation_fn(),
-        outputStructType=ROTATION_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        ["parameter"],
+        fold,
+        (None, 0, 0.0),
+        ["minute_epoch_s", "bid"],
+        ROTATION_SCHEMA,
+        STATE_SCHEMA,
     )
 
 
@@ -106,96 +168,37 @@ SESSIONIZE_SCHEMA = (
 SESSION_STATE_SCHEMA = "last_ts_s long, session_idx long, seq long"
 
 
-def make_sessionize_fn(gap_s: int):
-    def sessionize(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            last_ts, session_idx, seq = state.get
-        else:
-            last_ts, session_idx, seq = None, 0, 0
-        out: list[tuple[int, int, int, int]] = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            # event-time order within the batch at FULL microsecond
-            # precision — the batch query orders by (ts, event_id) with
-            # sub-second ts, so sorting by a second-truncated ts here
-            # could label same-second events in a different order.  The
-            # gap test itself stays on floored seconds (matching
-            # unix_timestamp in the batch query).  Across batches the
-            # state carries the frontier (late events beyond it join
-            # the open session — documented divergence, same policy as
-            # the rotation detector's late-data drop)
-            batch = pd.concat(chunks).sort_values(["ts_us", "event_id"])
-            for ts_us, event_id in zip(batch["ts_us"], batch["event_id"]):
-                ts_s = int(ts_us) // 1_000_000
-                if last_ts is None or ts_s - last_ts > gap_s:
-                    session_idx += 1
-                seq += 1
-                last_ts = ts_s
-                out.append((int(event_id), int(user_id), session_idx, seq))
-        state.update((last_ts, session_idx, seq))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "event_id", "user_id", "session_idx", "user_event_seq"
-                ],
-            )
-
-    return sessionize
-
-
 def sessionize_stream(events: DataFrame, gap_s: int = 1800) -> DataFrame:
     """events stream (event_id, ts, user_id, ...) -> per-event session
     labels, keyed state per user."""
-    from pyspark.sql import functions as F
 
-    keyed = events.select(
-        "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
+    def fold(key, state, batch):
+        (user_id,) = key
+        last_ts, session_idx, seq = state
+        out: list[tuple[int, int, int, int]] = []
+        # the gap test stays on floored seconds (matching
+        # unix_timestamp in the batch query).  Across batches the state
+        # carries the frontier (late events beyond it join the open
+        # session — documented divergence, same policy as the rotation
+        # detector's late-data drop)
+        for ts_us, event_id in zip(batch["ts_us"], batch["event_id"]):
+            ts_s = int(ts_us) // 1_000_000
+            if last_ts is None or ts_s - last_ts > gap_s:
+                session_idx += 1
+            seq += 1
+            last_ts = ts_s
+            out.append((int(event_id), int(user_id), session_idx, seq))
+        return (last_ts, session_idx, seq), out
+
+    return _keyed_fold(
+        _events_keyed(events),
+        ["user_id"],
+        fold,
+        (None, 0, 0),
+        ["ts_us", "event_id"],
+        SESSIONIZE_SCHEMA,
+        SESSION_STATE_SCHEMA,
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_sessionize_fn(gap_s),
-        outputStructType=SESSIONIZE_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- cluster state-store sizing ---------------------------------------------
-
-ROCKSDB_STATE_CONF = {
-    # At 100 TB / billions of keys the default HDFS-backed state store
-    # keeps every key's state in executor heap — the sessionizer's
-    # per-user rows alone would OOM an executor.  RocksDB spills state
-    # to local disk with bounded memory and makes checkpoints
-    # incremental (changelog), so state size is bounded by disk, not
-    # heap, and restore time by the changelog, not the full snapshot.
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-        "true"
-    ),
-    # cap RocksDB block-cache + memtable memory per executor instead of
-    # letting every loaded store grab its own default
-    "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
-    "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB": "2048",
-}
-
-
-def apply_rocksdb_state_conf(spark) -> None:
-    """Opt a session into the RocksDB state store for the cluster path.
-    Local replay tests keep the default provider (state row counts are
-    asserted against distinct keys either way —
-    tests/test_streaming.py::test_sessionizer_state_bounded_by_distinct_keys);
-    on a real cluster call this BEFORE starting stateful queries: the
-    provider is fixed per checkpoint location."""
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
 
 
 # --- streaming inter-arrival band counter ------------------------------------
@@ -222,49 +225,32 @@ def _band_of(gap_s: int) -> str:
     return _GAP_TOP
 
 
-def make_gapband_fn():
-    def gapband(key, pdfs, state):
-        import pandas as pd
-
-        _user_id, event_type = key
-        last_ts = state.get[0] if state.exists else None
-        out: list[tuple[str, str]] = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            # full-precision in-batch order (the sessionizer
-            # discipline); the gap itself is floored-epoch seconds,
-            # matching unix_timestamp in the batch query
-            batch = pd.concat(chunks).sort_values(["ts_us", "event_id"])
-            for ts_us in batch["ts_us"]:
-                ts_s = int(ts_us) // 1_000_000
-                if last_ts is not None:
-                    out.append((event_type, _band_of(ts_s - last_ts)))
-                last_ts = ts_s
-        state.update((last_ts,))
-        if out:
-            yield pd.DataFrame(out, columns=["event_type", "band"])
-
-    return gapband
-
-
 def gapband_stream(events: DataFrame) -> DataFrame:
     """events stream -> one (event_type, band) row per inter-arrival
     gap of that user's events of that type; a downstream rollup (or
     the consumer) counts per band.  State per key is a single long."""
-    from pyspark.sql import functions as F
 
-    keyed = events.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return keyed.groupBy("user_id", "event_type").applyInPandasWithState(
-        make_gapband_fn(),
-        outputStructType=GAPBAND_SCHEMA,
-        stateStructType=GAPBAND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def fold(key, state, batch):
+        _user_id, event_type = key
+        (last_ts,) = state
+        out: list[tuple[str, str]] = []
+        # the gap is floored-epoch seconds, matching unix_timestamp in
+        # the batch query
+        for ts_us in batch["ts_us"]:
+            ts_s = int(ts_us) // 1_000_000
+            if last_ts is not None:
+                out.append((event_type, _band_of(ts_s - last_ts)))
+            last_ts = ts_s
+        return (last_ts,), out
+
+    return _keyed_fold(
+        _events_keyed(events),
+        ["user_id", "event_type"],
+        fold,
+        (None,),
+        ["ts_us", "event_id"],
+        GAPBAND_SCHEMA,
+        GAPBAND_STATE_SCHEMA,
     )
 
 
@@ -279,49 +265,29 @@ ATTRIB_STATE_SCHEMA = "channel string"
 _ATTRIB_CHANNELS = ("view", "click")
 
 
-def make_attrib_fn():
-    def attribute(key, pdfs, state):
-        import pandas as pd
-
-        channel = state.get[0] if state.exists else None
-        out: list[tuple[int, str]] = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values(["ts_us", "event_id"])
-            for event_id, etype in zip(
-                batch["event_id"], batch["event_type"]
-            ):
-                if etype == "purchase":
-                    out.append(
-                        (int(event_id), channel if channel else "none")
-                    )
-                if etype in _ATTRIB_CHANNELS:
-                    channel = etype
-        state.update((channel,))
-        if out:
-            yield pd.DataFrame(out, columns=["event_id", "channel"])
-
-    return attribute
-
-
 def attribution_stream(events: DataFrame) -> DataFrame:
     """events stream -> one (purchase event_id, channel) row per
     purchase, attributed to the user's most recent preceding
     view/click ('none' if untouched).  State per user: one string."""
-    from pyspark.sql import functions as F
 
-    keyed = events.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_attrib_fn(),
-        outputStructType=ATTRIB_SCHEMA,
-        stateStructType=ATTRIB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def fold(key, state, batch):
+        (channel,) = state
+        out: list[tuple[int, str]] = []
+        for event_id, etype in zip(batch["event_id"], batch["event_type"]):
+            if etype == "purchase":
+                out.append((int(event_id), channel if channel else "none"))
+            if etype in _ATTRIB_CHANNELS:
+                channel = etype
+        return (channel,), out
+
+    return _keyed_fold(
+        _events_keyed(events),
+        ["user_id"],
+        fold,
+        (None,),
+        ["ts_us", "event_id"],
+        ATTRIB_SCHEMA,
+        ATTRIB_STATE_SCHEMA,
     )
 
 
@@ -346,78 +312,58 @@ HH_STATE_SCHEMA = (
 )
 
 
-def make_heavy_hitters_fn(k: int = HH_K):
-    def heavy_hitters(key, pdfs, state):
-        import pandas as pd
-
-        (shard,) = key
-        if state.exists:
-            items, counts, errs, n = state.get
-            items, counts, errs = list(items), list(counts), list(errs)
-        else:
-            items, counts, errs, n = [], [], [], 0
-        pos = {it: i for i, it in enumerate(items)}
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            # deterministic in-batch order (the sessionizer discipline)
-            batch = pd.concat(chunks).sort_values(["ts_us", "event_id"])
-            for it in batch["item"]:
-                it = int(it)
-                n += 1
-                i = pos.get(it)
-                if i is not None:
-                    counts[i] += 1
-                elif len(items) < k:
-                    pos[it] = len(items)
-                    items.append(it)
-                    counts.append(1)
-                    errs.append(0)
-                else:
-                    # evict the min-count entry (ties: smallest item id,
-                    # so replay order cannot change the victim)
-                    j = min(
-                        range(len(items)),
-                        key=lambda x: (counts[x], items[x]),
-                    )
-                    del pos[items[j]]
-                    pos[it] = j
-                    errs[j] = counts[j]
-                    counts[j] += 1
-                    items[j] = it
-        state.update((items, counts, errs, n))
-        # snapshot every batch; consumers keep each shard's rows with
-        # the highest n_processed (the final state)
-        yield pd.DataFrame(
-            {
-                "shard": [int(shard)] * len(items),
-                "item": items,
-                "est": counts,
-                "err": errs,
-                "n_processed": [n] * len(items),
-            }
-        )
-
-    return heavy_hitters
-
-
 def heavy_hitters_stream(events: DataFrame, k: int = HH_K) -> DataFrame:
     """events stream -> per-shard SpaceSaving top-talker snapshots
     (item = user_id).  State per shard: k (item, count, err) counters
-    — bounded regardless of the user-id domain."""
+    — bounded regardless of the user-id domain.  Every batch emits the
+    shard's counters; consumers keep each shard's rows with the
+    highest n_processed (the final state)."""
     from pyspark.sql import functions as F
 
-    keyed = events.select(
-        "event_id",
-        F.col("user_id").alias("item"),
-        (F.col("user_id") % HH_SHARDS).alias("shard"),
-        F.unix_micros("ts").alias("ts_us"),
+    def fold(key, state, batch):
+        (shard,) = key
+        items, counts, errs, n = state
+        items, counts, errs = list(items), list(counts), list(errs)
+        pos = {it: i for i, it in enumerate(items)}
+        for it in batch["user_id"]:
+            it = int(it)
+            n += 1
+            i = pos.get(it)
+            if i is not None:
+                counts[i] += 1
+            elif len(items) < k:
+                pos[it] = len(items)
+                items.append(it)
+                counts.append(1)
+                errs.append(0)
+            else:
+                # evict the min-count entry (ties: smallest item id,
+                # so replay order cannot change the victim)
+                j = min(
+                    range(len(items)),
+                    key=lambda x: (counts[x], items[x]),
+                )
+                del pos[items[j]]
+                pos[it] = j
+                errs[j] = counts[j]
+                counts[j] += 1
+                items[j] = it
+        rows = [
+            (int(shard), it, c, e, n) for it, c, e in zip(items, counts, errs)
+        ]
+        return (items, counts, errs, n), rows
+
+    keyed = _events_keyed(events).withColumn(
+        "shard", F.col("user_id") % HH_SHARDS
     )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        make_heavy_hitters_fn(k),
-        outputStructType=HH_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        ["shard"],
+        fold,
+        ([], [], [], 0),
+        ["ts_us", "event_id"],
+        HH_SCHEMA,
+        HH_STATE_SCHEMA,
     )
 
 
@@ -435,52 +381,29 @@ EWMA_SCHEMA = "user_id long, n_events long, ewma double"
 EWMA_STATE_SCHEMA = "ewma double, n long"
 
 
-def make_ewma_fn(alpha: float):
-    def ewma_fn(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            ewma, n = state.get
-        else:
-            ewma, n = None, 0
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            # whole-batch sort at full microsecond precision — the
-            # 63ebea5 determinism discipline (never per Arrow chunk)
-            batch = pd.concat(chunks).sort_values(["ts_us", "event_id"])
-            for v in batch["value"]:
-                x = float(v)
-                # identical expression shape to the batch fold:
-                # a * x + (1 - a) * acc, same IEEE double ops/order
-                ewma = x if ewma is None else alpha * x + (1 - alpha) * ewma
-                n += 1
-        state.update((ewma, n))
-        # snapshot per batch; consumers keep each user's max-n row
-        yield pd.DataFrame(
-            {"user_id": [int(user_id)], "n_events": [n], "ewma": [ewma]}
-        )
-
-    return ewma_fn
-
-
 def ewma_stream(events: DataFrame, alpha: float) -> DataFrame:
     """events stream -> per-user EWMA snapshots (one row per user per
     micro-batch; the max-n_events row per user is the final state)."""
-    from pyspark.sql import functions as F
 
-    keyed = events.select(
-        "event_id",
-        "user_id",
-        F.col("value").cast("double").alias("value"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_ewma_fn(alpha),
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def fold(key, state, batch):
+        (user_id,) = key
+        ewma, n = state
+        for v in batch["value"]:
+            x = float(v)
+            # identical expression shape to the batch fold:
+            # a * x + (1 - a) * acc, same IEEE double ops/order
+            ewma = x if ewma is None else alpha * x + (1 - alpha) * ewma
+            n += 1
+        return (ewma, n), [(int(user_id), n, ewma)]
+
+    return _keyed_fold(
+        _events_keyed(events),
+        ["user_id"],
+        fold,
+        (None, 0),
+        ["ts_us", "event_id"],
+        EWMA_SCHEMA,
+        EWMA_STATE_SCHEMA,
     )
 
 
@@ -496,67 +419,40 @@ HOLT_SCHEMA = "user_id long, n_events long, level double, trend double"
 HOLT_STATE_SCHEMA = "l double, b double, n long"
 
 
-def make_holt_fn(alpha: float, beta: float):
-    def holt_fn(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            level, trend, n = state.get
-        else:
-            level, trend, n = None, None, 0
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            # whole-batch sort at full microsecond precision — the
-            # 63ebea5 determinism discipline (never per Arrow chunk)
-            batch = pd.concat(chunks).sort_values(["ts_us", "event_id"])
-            for v in batch["value"]:
-                x = float(v)
-                n += 1
-                if n == 1:
-                    level, trend = x, 0.0
-                elif n == 2:
-                    # init consumes x1 and x2: (l, b) = (x1, x2 - x1),
-                    # the batch fold's initial state
-                    trend = x - level
-                else:
-                    # identical expression shape to the batch fold
-                    new_l = alpha * x + (1 - alpha) * (level + trend)
-                    trend = beta * (new_l - level) + (1 - beta) * trend
-                    level = new_l
-        state.update((level, trend, n))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(user_id)],
-                "n_events": [n],
-                "level": [level],
-                "trend": [trend],
-            }
-        )
-
-    return holt_fn
-
-
 def holt_stream(
     events: DataFrame, alpha: float, beta: float
 ) -> DataFrame:
     """events stream -> per-user Holt (level, trend) snapshots (one
     row per user per micro-batch; the max-n_events row per user is
     the final state)."""
-    from pyspark.sql import functions as F
 
-    keyed = events.select(
-        "event_id",
-        "user_id",
-        F.col("value").cast("double").alias("value"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_holt_fn(alpha, beta),
-        outputStructType=HOLT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def fold(key, state, batch):
+        (user_id,) = key
+        level, trend, n = state
+        for v in batch["value"]:
+            x = float(v)
+            n += 1
+            if n == 1:
+                level, trend = x, 0.0
+            elif n == 2:
+                # init consumes x1 and x2: (l, b) = (x1, x2 - x1),
+                # the batch fold's initial state
+                trend = x - level
+            else:
+                # identical expression shape to the batch fold
+                new_l = alpha * x + (1 - alpha) * (level + trend)
+                trend = beta * (new_l - level) + (1 - beta) * trend
+                level = new_l
+        return (level, trend, n), [(int(user_id), n, level, trend)]
+
+    return _keyed_fold(
+        _events_keyed(events),
+        ["user_id"],
+        fold,
+        (None, None, 0),
+        ["ts_us", "event_id"],
+        HOLT_SCHEMA,
+        HOLT_STATE_SCHEMA,
     )
 
 
@@ -581,66 +477,43 @@ def _tdiv(a: int, b: int) -> int:
     return q if a >= 0 else -q
 
 
-def make_macd_fn():
-    def macd_fn(key, pdfs, state):
-        import pandas as pd
-
-        (day,) = key
-        if state.exists:
-            e12, e26, sig, n = state.get
-        else:
-            e12, e26, sig, n = 0, 0, 0, 0
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            # whole-batch sort (the 63ebea5 determinism discipline)
-            batch = pd.concat(chunks).sort_values("m")
-            for c in batch["close_c"]:
-                x = int(c) * 1_000_000_000
-                n += 1
-                if n == 1:
-                    e12 = e26 = x
-                    sig = 0
-                else:
-                    # identical integer machine to the batch fold
-                    e12 = _tdiv(2 * x + 11 * e12, 13)
-                    e26 = _tdiv(2 * x + 25 * e26, 27)
-                    sig = _tdiv((e12 - e26) + 4 * sig, 5)
-        state.update((e12, e26, sig, n))
-
-        def q6(a: int) -> float:
-            return _tdiv(a + (50000 if a >= 0 else -50000), 100000) / 1e6
-
-        line = e12 - e26
-        yield pd.DataFrame(
-            {
-                "day": [day],
-                "n_bars": [n],
-                "macd": [q6(line)],
-                "signal": [q6(sig)],
-                "histogram": [q6(line - sig)],
-            }
-        )
-
-    return macd_fn
+def _q6(a: int) -> float:
+    """A price in 1e-11 units (cents x 1e9) -> its 6-dp double,
+    HALF_UP (away from zero)."""
+    return _tdiv(a + (50000 if a >= 0 else -50000), 100000) / 1e6
 
 
 def macd_stream(candles: DataFrame) -> DataFrame:
     """Candle stream (m timestamp, close_c cents) -> per-day MACD
     snapshots (one row per day per micro-batch; the max-n_bars row per
     day is the final state)."""
-    from pyspark.sql import functions as F
 
-    keyed = candles.select(
-        F.col("m").cast("timestamp").alias("m"),
-        F.col("m").cast("date").alias("day"),
-        F.col("close_c").cast("long").alias("close_c"),
-    )
-    return keyed.groupBy("day").applyInPandasWithState(
-        make_macd_fn(),
-        outputStructType=MACD_STREAM_SCHEMA,
-        stateStructType=MACD_STREAM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def fold(key, state, batch):
+        (day,) = key
+        e12, e26, sig, n = state
+        for c in batch["close_c"]:
+            x = int(c) * 1_000_000_000
+            n += 1
+            if n == 1:
+                e12 = e26 = x
+                sig = 0
+            else:
+                # identical integer machine to the batch fold
+                e12 = _tdiv(2 * x + 11 * e12, 13)
+                e26 = _tdiv(2 * x + 25 * e26, 27)
+                sig = _tdiv((e12 - e26) + 4 * sig, 5)
+        line = e12 - e26
+        row = (day, n, _q6(line), _q6(sig), _q6(line - sig))
+        return (e12, e26, sig, n), [row]
+
+    return _keyed_fold(
+        _candles_by_day(candles, "close_c"),
+        ["day"],
+        fold,
+        (0, 0, 0, 0),
+        ["m"],
+        MACD_STREAM_SCHEMA,
+        MACD_STREAM_STATE_SCHEMA,
     )
 
 
@@ -662,97 +535,64 @@ SAR_STREAM_STATE_SCHEMA = (
 _SAR_STREAM_FP = 1_000_000_000
 
 
-def make_sar_fn():
-    def sar_fn(key, pdfs, state):
-        import pandas as pd
-
-        FP = _SAR_STREAM_FP
-        (day,) = key
-        if state.exists:
-            t, sar, ep, k, n, hp, lp, hpp, lpp, c1 = state.get
-        else:
-            t, sar, ep, k, n, hp, lp, hpp, lpp, c1 = (
-                0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-            )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values("m")
-            for h, l, c in zip(
-                batch["high_c"], batch["low_c"], batch["close_c"]
-            ):
-                h, l, c = int(h), int(l), int(c)
-                n += 1
-                if n == 1:
-                    hp = hpp = h
-                    lp = lpp = l
-                    c1 = c
-                    continue
-                if n == 2:
-                    # seed from the first two closes (batch semantics)
-                    t = 1 if c >= c1 else -1
-                    sar = (lp if t == 1 else hp) * FP
-                    ep = hp if t == 1 else lp
-                    k = 1
-                # one step of the batch machine (identical integers)
-                raw = _tdiv((50 - k) * sar + k * ep * FP, 50)
-                if t == 1:
-                    clamped = min(raw, lp * FP, lpp * FP)
-                    flip = l * FP < clamped
-                else:
-                    clamped = max(raw, hp * FP, hpp * FP)
-                    flip = h * FP > clamped
-                if flip:
-                    sar = ep * FP
-                    ep = l if t == 1 else h
-                    t, k = -t, 1
-                else:
-                    if t == 1:
-                        if h > ep:
-                            k = min(k + 1, 10)
-                        ep = max(ep, h)
-                    else:
-                        if l < ep:
-                            k = min(k + 1, 10)
-                        ep = min(ep, l)
-                    sar = clamped
-                hpp, lpp = hp, lp
-                hp, lp = h, l
-        state.update((t, sar, ep, k, n, hp, lp, hpp, lpp, c1))
-
-        def q6(a: int) -> float:
-            return _tdiv(a + (50000 if a >= 0 else -50000), 100000) / 1e6
-
-        yield pd.DataFrame(
-            {
-                "day": [day],
-                "n_bars": [n],
-                "trend": [int(t)],
-                "sar": [q6(sar)],
-            }
-        )
-
-    return sar_fn
-
-
 def sar_stream(candles: DataFrame) -> DataFrame:
     """Candle stream (m timestamp, high_c/low_c/close_c cents) ->
     per-day Parabolic SAR snapshots (one row per day per micro-batch;
     the max-n_bars row per day is the final state)."""
-    from pyspark.sql import functions as F
 
-    keyed = candles.select(
-        F.col("m").cast("timestamp").alias("m"),
-        F.col("m").cast("date").alias("day"),
-        F.col("high_c").cast("long").alias("high_c"),
-        F.col("low_c").cast("long").alias("low_c"),
-        F.col("close_c").cast("long").alias("close_c"),
-    )
-    return keyed.groupBy("day").applyInPandasWithState(
-        make_sar_fn(),
-        outputStructType=SAR_STREAM_SCHEMA,
-        stateStructType=SAR_STREAM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def fold(key, state, batch):
+        FP = _SAR_STREAM_FP
+        (day,) = key
+        t, sar, ep, k, n, hp, lp, hpp, lpp, c1 = state
+        for h, l, c in zip(batch["high_c"], batch["low_c"], batch["close_c"]):
+            h, l, c = int(h), int(l), int(c)
+            n += 1
+            if n == 1:
+                hp = hpp = h
+                lp = lpp = l
+                c1 = c
+                continue
+            if n == 2:
+                # seed from the first two closes (batch semantics)
+                t = 1 if c >= c1 else -1
+                sar = (lp if t == 1 else hp) * FP
+                ep = hp if t == 1 else lp
+                k = 1
+            # one step of the batch machine (identical integers)
+            raw = _tdiv((50 - k) * sar + k * ep * FP, 50)
+            if t == 1:
+                clamped = min(raw, lp * FP, lpp * FP)
+                flip = l * FP < clamped
+            else:
+                clamped = max(raw, hp * FP, hpp * FP)
+                flip = h * FP > clamped
+            if flip:
+                sar = ep * FP
+                ep = l if t == 1 else h
+                t, k = -t, 1
+            else:
+                if t == 1:
+                    if h > ep:
+                        k = min(k + 1, 10)
+                    ep = max(ep, h)
+                else:
+                    if l < ep:
+                        k = min(k + 1, 10)
+                    ep = min(ep, l)
+                sar = clamped
+            hpp, lpp = hp, lp
+            hp, lp = h, l
+        new_state = (t, sar, ep, k, n, hp, lp, hpp, lpp, c1)
+        return new_state, [(day, n, int(t), _q6(sar))]
+
+    return _keyed_fold(
+        _candles_by_day(candles, "high_c", "low_c", "close_c"),
+        ["day"],
+        fold,
+        (0,) * 10,
+        ["m"],
+        SAR_STREAM_SCHEMA,
+        SAR_STREAM_STATE_SCHEMA,
     )
 
 
@@ -769,79 +609,50 @@ ST_STREAM_STATE_SCHEMA = (
 )
 
 
-def make_supertrend_fn():
-    def st_fn(key, pdfs, state):
-        import pandas as pd
-
-        FP = 1_000_000_000
-        (day,) = key
-        if state.exists:
-            atr, fub, flb, t, n, cp = state.get
-        else:
-            atr, fub, flb, t, n, cp = 0, 0, 0, 0, 0, 0
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values("m")
-            for h, l, c in zip(
-                batch["high_c"], batch["low_c"], batch["close_c"]
-            ):
-                h, l, c = int(h), int(l), int(c)
-                n += 1
-                if n == 1:
-                    atr = (h - l) * FP
-                    fub = (h + l) * FP + 6 * atr
-                    flb = (h + l) * FP - 6 * atr
-                    t = 1
-                    cp = c
-                    continue
-                tr = max(h - l, abs(h - cp), abs(l - cp))
-                atr = _tdiv(9 * atr + tr * FP, 10)
-                bub = (h + l) * FP + 6 * atr
-                blb = (h + l) * FP - 6 * atr
-                if bub < fub or cp * 2 * FP > fub:
-                    fub = bub
-                if blb > flb or cp * 2 * FP < flb:
-                    flb = blb
-                if c * 2 * FP > fub:
-                    t = 1
-                elif c * 2 * FP < flb:
-                    t = -1
-                cp = c
-        state.update((atr, fub, flb, t, n, cp))
-
-        def q2(a: int) -> float:
-            return _tdiv(a + (100000 if a >= 0 else -100000), 200000) / 1e6
-
-        yield pd.DataFrame(
-            {
-                "day": [day],
-                "n_bars": [n],
-                "trend": [int(t)],
-                "supertrend": [q2(flb if t == 1 else fub)],
-            }
-        )
-
-    return st_fn
-
-
 def supertrend_stream(candles: DataFrame) -> DataFrame:
     """Candle stream (m, high_c/low_c/close_c cents) -> per-day
     Supertrend snapshots (max-n_bars row per day = final state)."""
-    from pyspark.sql import functions as F
 
-    keyed = candles.select(
-        F.col("m").cast("timestamp").alias("m"),
-        F.col("m").cast("date").alias("day"),
-        F.col("high_c").cast("long").alias("high_c"),
-        F.col("low_c").cast("long").alias("low_c"),
-        F.col("close_c").cast("long").alias("close_c"),
-    )
-    return keyed.groupBy("day").applyInPandasWithState(
-        make_supertrend_fn(),
-        outputStructType=ST_STREAM_SCHEMA,
-        stateStructType=ST_STREAM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def fold(key, state, batch):
+        FP = 1_000_000_000
+        (day,) = key
+        atr, fub, flb, t, n, cp = state
+        for h, l, c in zip(batch["high_c"], batch["low_c"], batch["close_c"]):
+            h, l, c = int(h), int(l), int(c)
+            n += 1
+            if n == 1:
+                atr = (h - l) * FP
+                fub = (h + l) * FP + 6 * atr
+                flb = (h + l) * FP - 6 * atr
+                t = 1
+                cp = c
+                continue
+            tr = max(h - l, abs(h - cp), abs(l - cp))
+            atr = _tdiv(9 * atr + tr * FP, 10)
+            bub = (h + l) * FP + 6 * atr
+            blb = (h + l) * FP - 6 * atr
+            if bub < fub or cp * 2 * FP > fub:
+                fub = bub
+            if blb > flb or cp * 2 * FP < flb:
+                flb = blb
+            if c * 2 * FP > fub:
+                t = 1
+            elif c * 2 * FP < flb:
+                t = -1
+            cp = c
+        # the bands hold (h + l): twice the price, halved while rounding
+        band = flb if t == 1 else fub
+        q2 = _tdiv(band + (100000 if band >= 0 else -100000), 200000) / 1e6
+        return (atr, fub, flb, t, n, cp), [(day, n, int(t), q2)]
+
+    return _keyed_fold(
+        _candles_by_day(candles, "high_c", "low_c", "close_c"),
+        ["day"],
+        fold,
+        (0,) * 6,
+        ["m"],
+        ST_STREAM_SCHEMA,
+        ST_STREAM_STATE_SCHEMA,
     )
 
 
@@ -857,38 +668,6 @@ def supertrend_stream(candles: DataFrame) -> DataFrame:
 
 SENTFREQ_SCHEMA = "s string, source string, cnt long, c_total long"
 SENTFREQ_STATE_SCHEMA = "sources array<string>, counts array<long>"
-
-
-def make_sentence_freq_fn():
-    def sentence_freq(key, pdfs, state):
-        import pandas as pd
-
-        (s,) = key
-        if state.exists:
-            srcs, cnts = state.get
-            counts = dict(zip(srcs, cnts))
-        else:
-            counts = {}
-        for pdf in pdfs:
-            for src in pdf["source"]:
-                counts[src] = counts.get(src, 0) + 1
-        keys = sorted(counts)
-        state.update((keys, [counts[k] for k in keys]))
-        total = sum(counts.values())
-        # UPDATE semantics: re-emit every source row of this sentence
-        # with the refreshed global total, so a downstream consumer's
-        # latest row per (s, source) always carries a consistent
-        # (cnt, c_total) pair
-        yield pd.DataFrame(
-            {
-                "s": s,
-                "source": keys,
-                "cnt": [counts[k] for k in keys],
-                "c_total": total,
-            }
-        )
-
-    return sentence_freq
 
 
 def sentence_freq_stream(
@@ -907,15 +686,32 @@ def sentence_freq_stream(
         normalized_sentences,
     )
 
+    def fold(key, state, batch):
+        (s,) = key
+        counts = dict(zip(*state))
+        for src in batch["source"]:
+            counts[src] = counts.get(src, 0) + 1
+        keys = sorted(counts)
+        total = sum(counts.values())
+        # UPDATE semantics: re-emit every source row of this sentence
+        # with the refreshed global total, so a downstream consumer's
+        # latest row per (s, source) always carries a consistent
+        # (cnt, c_total) pair
+        rows = [(s, src, counts[src], total) for src in keys]
+        return (keys, [counts[k] for k in keys]), rows
+
     sents = normalized_sentences(
         docs, SENT_MIN_CHARS if min_chars is None else min_chars
     )
-    return sents.groupBy("s").applyInPandasWithState(
-        make_sentence_freq_fn(),
-        outputStructType=SENTFREQ_SCHEMA,
-        stateStructType=SENTFREQ_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        sents,
+        ["s"],
+        fold,
+        ([], []),
+        ["source"],
+        SENTFREQ_SCHEMA,
+        SENTFREQ_STATE_SCHEMA,
+        mode="update",
     )
 
 
@@ -950,30 +746,42 @@ PPLBUCKET_STATE_SCHEMA = "doc_ids array<long>, scores array<long>"
 PPL_BUCKET_NAMES = ("head", "middle", "tail")
 
 
-def make_ppl_bucket_fn(n_buckets: int):
-    def ppl_buckets(key, pdfs, state):
-        import pandas as pd
+def perplexity_bucket_stream(
+    docs: DataFrame, lm: DataFrame, n_buckets: int | None = None
+) -> DataFrame:
+    """documents stream (doc_id, source, text) + STATIC (w1, w2, logp)
+    bigram LM -> per-(source, bucket) running head/middle/tail table.
+    The bigram projection IS the batch id's
+    (retrieval.bigram_rows — one shared definition, like the sentence
+    twin); the LM join is a static-side broadcast legal in streaming;
+    the only stateful key is the source.  The batch is sorted by
+    (doc_id, logp), which fixes each document's float summation
+    order."""
+    from pyspark.sql import functions as F
 
+    from binancedatapipelineinaws_spark.functions.retrieval import (
+        PPL_N_BUCKETS,
+        bigram_rows,
+    )
+
+    if n_buckets is None:
+        n_buckets = PPL_N_BUCKETS
+
+    def fold(key, state, batch):
         (source,) = key
-        if state.exists:
-            ids, sc = state.get
-            seen = dict(zip(ids, sc))
-        else:
-            seen = {}
-        for pdf in pdfs:
-            g = pdf.groupby("doc_id")["logp"]
-            sums, counts = g.sum(), g.count()
-            for d in sums.index:
-                # the batch id rounds avg(logp) to 6dp (HALF_UP on a
-                # double) before ranking; mirror on the 1e-6 integer
-                # grid, away-from-zero for the negative log scores
-                avg = sums[d] / counts[d]
-                micro = avg * 1e6
-                seen[int(d)] = int(
-                    -int(-micro + 0.5) if micro < 0 else int(micro + 0.5)
-                )
+        seen = dict(zip(*state))
+        g = batch.groupby("doc_id")["logp"]
+        sums, counts = g.sum(), g.count()
+        for d in sums.index:
+            # the batch id rounds avg(logp) to 6dp (HALF_UP on a
+            # double) before ranking; mirror on the 1e-6 integer
+            # grid, away-from-zero for the negative log scores
+            avg = sums[d] / counts[d]
+            micro = avg * 1e6
+            seen[int(d)] = int(
+                -int(-micro + 0.5) if micro < 0 else int(micro + 0.5)
+            )
         ids = sorted(seen)
-        state.update((ids, [seen[i] for i in ids]))
         # ntile over everything seen: ORDER BY score DESC, doc_id ASC
         # (the batch id's total order), first (n % k) buckets one doc
         # larger — Spark/DuckDB ntile semantics
@@ -1002,39 +810,19 @@ def make_ppl_bucket_fn(n_buckets: int):
             rows.append(
                 (source, name, n_c, (q if tot >= 0 else -q) / 1e6)
             )
-        yield pd.DataFrame(
-            rows, columns=["source", "bucket", "n_docs", "avg_lm_score"]
-        )
+        return (ids, [seen[i] for i in ids]), rows
 
-    return ppl_buckets
-
-
-def perplexity_bucket_stream(
-    docs: DataFrame, lm: DataFrame, n_buckets: int | None = None
-) -> DataFrame:
-    """documents stream (doc_id, source, text) + STATIC (w1, w2, logp)
-    bigram LM -> per-(source, bucket) running head/middle/tail table.
-    The bigram projection IS the batch id's
-    (retrieval.bigram_rows — one shared definition, like the sentence
-    twin); the LM join is a static-side broadcast legal in streaming;
-    the only stateful key is the source."""
-    from pyspark.sql import functions as F
-
-    from binancedatapipelineinaws_spark.functions.retrieval import (
-        PPL_N_BUCKETS,
-        bigram_rows,
-    )
-
-    if n_buckets is None:
-        n_buckets = PPL_N_BUCKETS
     bg = bigram_rows(docs.select("doc_id", "source", "text"))
     scored = bg.join(F.broadcast(lm), ["w1", "w2"]).select(
         "source", "doc_id", "logp"
     )
-    return scored.groupBy("source").applyInPandasWithState(
-        make_ppl_bucket_fn(n_buckets),
-        outputStructType=PPLBUCKET_SCHEMA,
-        stateStructType=PPLBUCKET_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        scored,
+        ["source"],
+        fold,
+        ([], []),
+        ["doc_id", "logp"],
+        PPLBUCKET_SCHEMA,
+        PPLBUCKET_STATE_SCHEMA,
+        mode="update",
     )

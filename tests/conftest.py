@@ -20,7 +20,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
 
 

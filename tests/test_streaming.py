@@ -24,6 +24,22 @@ from binancedatapipelineinaws_spark.streaming.pipeline import (
 
 SF = "/root/testdata/sf0.001"
 
+_ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@pytest.fixture
+def arrow_chunks_of_7(spark):
+    """Hand pandas kernels their input in 7-row Arrow chunks, so a key
+    with more than 7 rows in a micro-batch arrives as several chunks;
+    the session's setting is restored afterwards."""
+    before = spark.conf.getAll.get(_ARROW_BATCH)
+    spark.conf.set(_ARROW_BATCH, "7")
+    yield
+    if before is None:
+        spark.conf.unset(_ARROW_BATCH)
+    else:
+        spark.conf.set(_ARROW_BATCH, before)
+
 
 @pytest.fixture(scope="module")
 def tick_files(spark, tmp_path_factory):
@@ -418,6 +434,7 @@ def test_streaming_sliding_window_matches_batch(spark, tick_files, tmp_path):
     assert got.count() >= batch.count() - 11
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_stateful_rotation_detector(spark, tick_files, tmp_path):
     """applyInPandasWithState rotation detector: emitted closed minutes
     must match the batch per-minute aggregation for every minute except
@@ -617,6 +634,7 @@ def test_stream_static_enrichment_matches_batch(spark, tmp_path):
     assert got.exceptAll(want.select(*got.columns)).count() == 0
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_sessionize_matches_batch(spark, tmp_path):
     """applyInPandasWithState sessionizer replayed over the events table
     must label every event exactly like the batch gaps-and-islands
@@ -702,6 +720,7 @@ def test_sessionizer_state_bounded_by_distinct_keys(spark, tmp_path):
     assert got.count() == ev.count()
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_gapband_matches_batch_histogram(spark, tmp_path):
     """The stateful gap-band counter replayed over the events table
     must reproduce the batch inter-arrival histogram
@@ -742,6 +761,7 @@ def test_streaming_gapband_matches_batch_histogram(spark, tmp_path):
     assert bad.count() == 0
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_attribution_matches_batch(spark, tmp_path):
     """The stateful last-touch attributor replayed over the events
     table must produce per-channel purchase counts identical to the
@@ -836,6 +856,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     assert want.exceptAll(got).count() == 0
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_heavy_hitters_spacesaving_guarantees(spark, tmp_path):
     """SpaceSaving invariants against exact batch counts, replayed over
     multiple micro-batches (maxFilesPerTrigger=1 so state evolves
@@ -1115,6 +1136,7 @@ def test_streaming_dedup_first_events_within_horizon_twin(
     assert joined.filter(F.col("n_kept") < 1).count() == 0
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_ewma_matches_batch_fold(spark, tmp_path):
     """In-order replay of the O(1)-state streaming EWMA kernel must
     equal the oracle-gated batch fold (q_ext_ewma) at 6 dp for every
@@ -1297,6 +1319,7 @@ def test_stream_stream_left_outer_interval_join_abandonment(spark, tmp_path):
     assert nulls_got.count() > 0  # the corpus must exercise the null path
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_holt_matches_batch(spark, tmp_path):
     """The O(1)-state streaming Holt kernel replayed over time-sliced
     event files must equal the oracle-gated batch fold
@@ -1358,6 +1381,7 @@ def test_streaming_holt_matches_batch(spark, tmp_path):
     assert want.exceptAll(final).count() == 0
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_macd_matches_batch_exactly(spark, tmp_path):
     """The O(1)-state streaming MACD kernel replayed over time-sliced
     candle files must equal the oracle-gated batch fold (q_ext_macd)
@@ -1425,6 +1449,7 @@ def test_streaming_macd_matches_batch_exactly(spark, tmp_path):
     assert want.exceptAll(final).count() == 0
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_sar_matches_batch_exactly(spark, tmp_path):
     """The O(1)-state streaming Parabolic SAR kernel replayed over
     time-sliced candle files must equal the oracle-gated batch fold
@@ -1490,6 +1515,7 @@ def test_streaming_sar_matches_batch_exactly(spark, tmp_path):
     assert want.exceptAll(final).count() == 0
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_supertrend_matches_batch_exactly(spark, tmp_path):
     """The O(1)-state streaming Supertrend kernel replayed over
     time-sliced candle files must equal the oracle-gated batch fold
@@ -1777,6 +1803,7 @@ def test_upsert_publish_crash_recovery(spark, tmp_path):
     assert not glob.glob(table_dir + ".tmp-*")
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_sentence_freq_matches_batch(spark, tmp_path):
     """Streaming twin of q_ext_sentence_dedup (VERDICT r11 item 7):
     replay the documents corpus in 3 micro-batches through the
@@ -1851,6 +1878,7 @@ def test_streaming_sentence_freq_matches_batch(spark, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
+@pytest.mark.usefixtures("arrow_chunks_of_7")
 def test_streaming_perplexity_buckets_match_batch(spark, tmp_path):
     """Streaming twin of q_ext_perplexity_buckets (VERDICT r12 item 7):
     replay the documents corpus in 3 micro-batches through the

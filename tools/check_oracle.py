@@ -520,10 +520,7 @@ def main():
     # are a supported Spark pattern; each worker gets its own DuckDB
     # cursor).  Sweep speedup is ~Nx on the long latency-bound tail —
     # the sf10 sweep is hours serial, tens of minutes at 4-6 threads.
-    master_cores = min(32, 8 * threads)
-    spark = get_spark(
-        "oracle-check", master=f"local[{master_cores}]", shuffle_partitions=8
-    )
+    spark = get_spark("oracle-check", shuffle_partitions=8)
     # PER-QUERY DuckDB connections, each with its OWN memory budget and
     # spill directory.  Two r9 sf10 post-mortems drove this: with one
     # shared in-memory database (a) the default memory_limit is 80% of

@@ -54,13 +54,6 @@ def hex32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def hex32b(col: Column) -> Column:
-    """Second 32-bit word of the md5 (hex chars 9-16) — combined with
-    hex32 this gives a 64-bit fingerprint without bigint overflow (each
-    word stays < 2^32 in a signed long)."""
-    return F.conv(F.substring(F.md5(col), 9, 8), 16, 10).cast("long")
-
-
 def duck_hex32(expr: str, start: int = 0) -> str:
     terms = " + ".join(
         f"(strpos('0123456789abcdef', substr(md5({expr}), {start + i + 1}, 1)) - 1)"

@@ -19,7 +19,6 @@ buffer).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -320,13 +319,6 @@ def make_header_parser():
 
 # module-level alias for unit tests (driver-side use only)
 parse_image_header = make_header_parser()
-
-
-def fake_decode_meta(data: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for decoded (width, height): derived from
-    the content hash, so the oracle can reproduce it."""
-    h = hashlib.md5(data).hexdigest()
-    return int(h[:8], 16) % 1920, int(h[8:16], 16) % 1080
 
 
 def make_extract_meta_kernel():

@@ -27,13 +27,22 @@ concatenates the chunks and sorts the whole batch ONCE by the kernel's
 summation order included).
 
 Folds are closures (pickled by value) like every Python kernel in this
-engine.
+engine.  Some call module-level helpers (`_tdiv`, `_q6`, `_band_of`),
+and cloudpickle sends a module's functions by import path, which the
+Python workers of a driver started outside the checkout cannot
+resolve.  The module is therefore registered to pickle by value: each
+helper travels with the fold that calls it, from one definition.
 """
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 ROTATION_SCHEMA = (
     "parameter string, minute_epoch_s long, trades long, volume double"

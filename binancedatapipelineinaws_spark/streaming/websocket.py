@@ -138,14 +138,6 @@ def _send_frame(
     sock.sendall(bytes(header) + payload)
 
 
-def send_text(conn: WSConn, text: str) -> None:
-    _send_frame(conn.sock, OP_TEXT, text.encode())
-
-
-def send_close(conn: WSConn, code: int = 1000) -> None:
-    _send_frame(conn.sock, OP_CLOSE, struct.pack(">H", code))
-
-
 def _recv_exact(conn: WSConn, n: int) -> bytes:
     # serve from the handshake-leftover buffer first
     while len(conn.buf) < n:

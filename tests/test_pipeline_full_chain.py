@@ -36,6 +36,7 @@ from binancedatapipelineinaws_spark.streaming.pipeline import (
     TICKS_WIRE_SCHEMA,
     canonical_stream,
     ohlcv_stream,
+    read_sink_table,
     read_tick_stream,
 )
 from tests.test_streaming_websocket import (
@@ -178,16 +179,16 @@ def test_ws_to_merge_state_crash_restart(spark, tmp_path):
     from the ACTUAL front door — live WebSocket -> minute-rotated TSV
     spool -> file stream -> canonicalize -> event mapping ->
     merge_state_sink — across a killed-and-restarted query, in both
-    crash windows:
+    crash windows (one spooled minute per micro-batch):
 
-      A. killed AFTER the merge published but BEFORE the checkpoint
+      A. killed AFTER the version commit but BEFORE the checkpoint
          commit (simulated by deleting the newest commit marker):
-         Spark re-delivers the batch; the table's _applied_max makes
-         it a no-op — totals don't double.
-      B. killed BETWEEN the two publish renames (table_dir absent,
-         .old-N snapshot on disk) AND before the checkpoint commit:
-         _recover restores the snapshot, then the re-delivered
-         batch no-ops against the restored marker.
+         Spark re-delivers the batch; its id is at or below the live
+         version, so it is a no-op — totals don't double.
+      B. killed after the version rename but BEFORE the older version
+         was dropped, AND before the checkpoint commit: the highest
+         version stays live, the re-delivered batch no-ops against
+         it, and the stale older version is removed.
 
     Then a NEW spooled minute arrives and the restarted query
     accumulates exactly one more batch — the final state equals the
@@ -237,7 +238,11 @@ def test_ws_to_merge_state_crash_restart(spark, tmp_path):
 
     def run():
         q = merge_state_sink(
-            to_events(canonical_stream(read_tick_stream(spark, spool))),
+            to_events(
+                canonical_stream(
+                    read_tick_stream(spark, spool, max_files_per_trigger=1)
+                )
+            ),
             table_dir,
             ckpt,
         )
@@ -264,7 +269,7 @@ def test_ws_to_merge_state_crash_restart(spark, tmp_path):
 
     def state_rows():
         return sorted(
-            tuple(r) for r in spark.read.parquet(table_dir + "/data").collect()
+            tuple(r) for r in read_sink_table(spark, table_dir).collect()
         )
 
     run()
@@ -288,21 +293,24 @@ def test_ws_to_merge_state_crash_restart(spark, tmp_path):
         if os.path.exists(crc):
             os.remove(crc)
 
-    # crash window A: merge published, checkpoint commit lost
+    assert sorted(os.listdir(table_dir)) == ["v-2"]  # three batches
+
+    # crash window A: version committed, checkpoint commit lost
     drop_newest_commit()
-    run()  # re-delivers the batch -> marker no-op
+    run()  # re-delivers batch 2 -> no-op
     assert state_rows() == want1
 
-    # crash window B: killed between the two publish renames AND the
-    # commit is lost — recovery must restore the snapshot, then the
-    # re-delivered batch must no-op against the RESTORED marker
-    os.rename(table_dir, table_dir + ".old-7")
-    os.makedirs(table_dir + ".tmp-7/data")
+    # crash window B: killed after the rename, before the older version
+    # was dropped, AND the commit is lost.  The stale version holds
+    # fewer rows than the live one, so reading it would show.
+    read_sink_table(spark, table_dir).limit(1).write.parquet(
+        f"{table_dir}/v-1"
+    )
+    assert state_rows() == want1
     drop_newest_commit()
     run()
     assert state_rows() == want1
-    assert not os.path.isdir(table_dir + ".old-7")
-    assert not os.path.isdir(table_dir + ".tmp-7")
+    assert sorted(os.listdir(table_dir)) == ["v-2"]
 
     # a NEW minute spools in (same wire format, 10 minutes later):
     # the restarted query accumulates exactly one more batch
@@ -326,21 +334,19 @@ def test_ws_to_merge_state_crash_restart(spark, tmp_path):
 def test_merge_state_torn_publish_remerges_inflight_batch(
     spark, tmp_path
 ):
-    """VERDICT r10 item 6 — the crash window no test had killed
-    inside: the process dies BETWEEN the two publish renames of a
-    batch that carried NEW data, AND before the checkpoint commit.
-    On-disk torn state: table_dir absent, `.old-N` = the PRE-batch
-    snapshot (whose _applied_max excludes the in-flight batch),
-    `.tmp-N` partially staged, checkpoint commit for batch N gone.
-    The restarted query must restore the snapshot, see batch N as
-    NOT applied, RE-MERGE it (not no-op — the branch
-    test_ws_to_merge_state_crash_restart never takes), and converge
-    to the batch recomputation: no loss, no double count."""
+    """VERDICT r10 item 6 — the process dies inside the commit of a
+    batch that carried NEW data, before its version rename, AND before
+    the checkpoint commit.  On-disk torn state: the PRE-batch version
+    `v-(N-1)` is live, `_staging-N` is partially written, and the
+    checkpoint commit for batch N is gone.  The restarted query must
+    see batch N as NOT applied, RE-MERGE it (not no-op — the branch
+    test_ws_to_merge_state_crash_restart never takes), drop the
+    staging directory, and converge to the correctly accumulated
+    state: no loss, no double count."""
     import os
     import shutil
 
     from binancedatapipelineinaws_spark.streaming.pipeline import (
-        _merge_applied_max,
         merge_state_sink,
     )
 
@@ -369,28 +375,29 @@ def test_merge_state_torn_publish_remerges_inflight_batch(
 
     def rows():
         return sorted(
-            tuple(r)
-            for r in spark.read.parquet(table_dir + "/data").collect()
+            tuple(r) for r in read_sink_table(spark, table_dir).collect()
         )
 
     add_files(b0, "b0")
     run()
-    assert _merge_applied_max(table_dir) == 0
-    pre_batch_snapshot = str(tmp_path / "s0_copy")
-    shutil.copytree(table_dir, pre_batch_snapshot)
+    assert sorted(os.listdir(table_dir)) == ["v-0"]
+    pre_batch_snapshot = str(tmp_path / "v0_copy")
+    shutil.copytree(f"{table_dir}/v-0", pre_batch_snapshot)
 
     add_files(b1, "b1")
     run()
-    assert _merge_applied_max(table_dir) == 1
+    assert sorted(os.listdir(table_dir)) == ["v-1"]
     want = rows()  # the correctly accumulated two-batch state
 
-    # fabricate the torn mid-publish state of batch 1: the published
-    # table is GONE (its markers with it), the pre-batch snapshot sits
-    # at .old-1, the staged version is half-written at .tmp-1, and the
-    # checkpoint never committed batch 1
-    shutil.rmtree(table_dir)
-    os.rename(pre_batch_snapshot, table_dir + ".old-1")
-    os.makedirs(table_dir + ".tmp-1/data")  # no marker: torn stage
+    # fabricate the torn mid-commit state of batch 1: its version was
+    # never renamed in, so the pre-batch version is live, the staged
+    # version is half-written, and the checkpoint never committed
+    # batch 1
+    shutil.rmtree(f"{table_dir}/v-1")
+    os.rename(pre_batch_snapshot, f"{table_dir}/v-0")
+    os.makedirs(f"{table_dir}/_staging-1")
+    with open(f"{table_dir}/_staging-1/part-00000.parquet", "wb") as f:
+        f.write(b"PAR1 torn")
     commits = [
         p
         for p in glob.glob(f"{ckpt}/commits/*")
@@ -402,10 +409,8 @@ def test_merge_state_torn_publish_remerges_inflight_batch(
     if os.path.exists(crc):
         os.remove(crc)
 
-    # restart: recovery restores the snapshot (marker 0), Spark
-    # re-delivers batch 1, and the sink RE-MERGES it
+    # restart: Spark re-delivers batch 1, above the live version 0, so
+    # the sink RE-MERGES it
     run()
     assert rows() == want
-    assert _merge_applied_max(table_dir) == 1
-    assert not os.path.isdir(table_dir + ".old-1")
-    assert not os.path.isdir(table_dir + ".tmp-1")
+    assert sorted(os.listdir(table_dir)) == ["v-1"]

@@ -17,6 +17,7 @@ from binancedatapipelineinaws_spark.streaming.pipeline import (
     canonical_stream,
     minute_file_sink,
     ohlcv_stream,
+    read_sink_table,
     read_tick_stream,
     table_append_sink,
     upsert_table_sink,
@@ -99,7 +100,7 @@ def test_upsert_sink_latest_wins_on_correction_replay(spark, tmp_path):
         q.awaitTermination(120)
 
     run()
-    got1 = spark.read.parquet(table_dir)
+    got1 = read_sink_table(spark, table_dir)
     assert got1.count() == 200
 
     corrected = (
@@ -117,7 +118,7 @@ def test_upsert_sink_latest_wins_on_correction_replay(spark, tmp_path):
         os.rename(p, f"{src}/corr{i}.tsv")
 
     run()
-    got2 = spark.read.parquet(table_dir)
+    got2 = read_sink_table(spark, table_dir)
     assert got2.count() == 200  # replaced, not appended
     fixed = got2.filter(F.col("price") == 99999.25)
     assert fixed.count() == 5
@@ -1582,9 +1583,9 @@ def test_streaming_supertrend_matches_batch_exactly(spark, tmp_path):
 
 def test_streaming_merge_state_matches_sequential_batch(spark, tmp_path):
     """merge_state_sink: the streamed accumulate-MERGE equals applying
-    the same per-batch MERGE sequentially in batch, re-delivered batch
-    ids are no-ops (the txn-marker exactly-once restore), and a
-    tombstoned user re-inserts on later activity."""
+    the same per-batch MERGE sequentially in batch, batch ids at or
+    below the live version are no-ops (the exactly-once restore), and
+    a tombstoned user re-inserts on later activity."""
     from binancedatapipelineinaws_spark.streaming.pipeline import (
         merge_state_sink,
     )
@@ -1610,7 +1611,7 @@ def test_streaming_merge_state_matches_sequential_batch(spark, tmp_path):
         q.awaitTermination(120)
 
     run()
-    state1 = spark.read.parquet(table_dir + "/data")
+    state1 = read_sink_table(spark, table_dir)
 
     # sequential batch replica of batch 0
     def batch_merge(state, batch):
@@ -1665,7 +1666,7 @@ def test_streaming_merge_state_matches_sequential_batch(spark, tmp_path):
     for i, p in enumerate(sorted(glob.glob(f"{src}/stage1/part-*"))):
         os.rename(p, f"{src}/b1_{i}.parquet")
     run()
-    state2 = spark.read.parquet(table_dir + "/data")
+    state2 = read_sink_table(spark, table_dir)
     want2 = batch_merge(want1, b1)
     assert state2.exceptAll(want2).count() == 0
     assert want2.exceptAll(state2).count() == 0
@@ -1678,43 +1679,50 @@ def test_streaming_merge_state_matches_sequential_batch(spark, tmp_path):
     )
     assert grew.count() > 0
 
-    # re-delivery of an applied batch id is a no-op (txn marker): the
-    # published table carries the max applied batch id (one integer,
-    # not a per-batch file set — r9 advice)
-    with open(table_dir + "/_applied_max") as f:
-        assert int(f.read().strip()) >= 1  # two batches applied
-    # call the merge function directly with an applied id: state unchanged
+    # the live version's name is the last applied batch id (two
+    # batches applied), and the version before it is gone
+    assert sorted(os.listdir(table_dir)) == ["v-1"]
+    # a fresh checkpoint numbers from 0 again and delivers every file
+    # as its batch 0: at or below the live version, so a no-op
     q = merge_state_sink(
         spark.readStream.schema(schema).parquet(src),
         table_dir,
-        str(tmp_path / "ckpt_replay"),  # fresh checkpoint: batch 0 replays ALL files
+        str(tmp_path / "ckpt_replay"),
     )
     q.awaitTermination(120)
-    state3 = spark.read.parquet(table_dir + "/data")
-    # fresh checkpoint renumbers batches, so batch 0 is NOT marker-
-    # protected here — this third run re-merges everything once more;
-    # assert only that the marker no-op path fired for the SAME
-    # checkpoint by replaying ckpt with no new files:
+    state3 = read_sink_table(spark, table_dir)
+    assert state3.exceptAll(state2).count() == 0
+    assert state2.exceptAll(state3).count() == 0
+    # the same checkpoint with no new files leaves the state as it is
     q = merge_state_sink(
         spark.readStream.schema(schema).parquet(src), table_dir, ckpt
     )
     q.awaitTermination(120)
-    state4 = spark.read.parquet(table_dir + "/data")
+    state4 = read_sink_table(spark, table_dir)
     assert state4.exceptAll(state3).count() == 0
     assert state3.exceptAll(state4).count() == 0
 
 
+def _drop_commit(ckpt: str, batch_id: int) -> None:
+    """Lose the checkpoint's commit of `batch_id`, as a kill before the
+    commit-log write does (its Hadoop .crc shadow too: left behind, it
+    fails the re-write as a concurrent writer)."""
+    for p in (f"{ckpt}/commits/{batch_id}", f"{ckpt}/commits/.{batch_id}.crc"):
+        if os.path.exists(p):
+            os.remove(p)
+
+
 def test_merge_state_publish_crash_recovery(spark, tmp_path):
-    """A crash between the two publish renames (table -> .old-N,
-    .tmp-N -> table) must NOT lose the accumulated state: _recover
-    restores the newest .old-* snapshot, markers intact, and the
-    interrupted batch re-merges instead of merging into nothing
-    (r9 advice, medium)."""
+    """A crash inside a batch's commit must NOT lose the accumulated
+    state.  Before the rename it leaves a half-written `_staging-N`
+    beside the live version: the table still reads as last committed,
+    and batch N, never applied, re-merges.  After the rename it leaves
+    the older version beside the new one: the re-delivered batch is a
+    no-op (no double count).  Either leftover is gone after the next
+    batch (r9 advice, medium)."""
     import shutil
 
     from binancedatapipelineinaws_spark.streaming.pipeline import (
-        _merge_applied_max,
-        _recover,
         merge_state_sink,
     )
 
@@ -1722,46 +1730,60 @@ def test_merge_state_publish_crash_recovery(spark, tmp_path):
     schema = ev.schema
     src = str(tmp_path / "ev_src")
     os.makedirs(src)
-    ev.limit(500).coalesce(1).write.mode("overwrite").parquet(src + "/st")
-    for i, p in enumerate(sorted(glob.glob(f"{src}/st/part-*"))):
-        os.rename(p, f"{src}/b0_{i}.parquet")
+    ordered = ev.orderBy("event_id")
     table_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    q = merge_state_sink(
-        spark.readStream.schema(schema).parquet(src), table_dir, ckpt
-    )
-    q.awaitTermination(120)
-    published = spark.read.parquet(table_dir + "/data").collect()
-    max0 = _merge_applied_max(table_dir)
-    assert max0 == 0
 
-    # simulate a crash exactly between the two publish renames of a
-    # hypothetical next batch: table_dir gone, snapshot + staged tmp left
-    os.rename(table_dir, table_dir + ".old-1")
-    os.makedirs(table_dir + ".tmp-1/data")
-    _recover(table_dir)
-    assert os.path.isdir(table_dir)
-    assert not os.path.isdir(table_dir + ".old-1")
-    assert not os.path.isdir(table_dir + ".tmp-1")
-    restored = spark.read.parquet(table_dir + "/data").collect()
-    assert sorted(map(tuple, restored)) == sorted(map(tuple, published))
-    # marker survived the rollback: the interrupted batch (id 1) is NOT
-    # marked applied, so its re-delivery re-merges rather than no-ops
-    assert _merge_applied_max(table_dir) == 0
+    def add_file(df, tag):
+        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/{tag}")
+        for i, p in enumerate(sorted(glob.glob(f"{src}/{tag}/part-*"))):
+            os.rename(p, f"{src}/{tag}_{i}.parquet")
 
-    # a completed publish that crashed before cleaning .old-N: recovery
-    # keeps the published table and just drops the stale snapshot
-    shutil.copytree(table_dir, table_dir + ".old-2")
-    _recover(table_dir)
-    assert os.path.isdir(table_dir)
-    assert not os.path.isdir(table_dir + ".old-2")
+    def run(table, checkpoint):
+        q = merge_state_sink(
+            spark.readStream.schema(schema).parquet(src), table, checkpoint
+        )
+        q.awaitTermination(120)
+
+    def rows(table):
+        return sorted(map(tuple, read_sink_table(spark, table).collect()))
+
+    # a clean twin drains the same arrivals into its own table
+    clean, clean_ckpt = str(tmp_path / "clean"), str(tmp_path / "clean_ckpt")
+    add_file(ordered.limit(500), "b0")
+    run(table_dir, ckpt)
+    run(clean, clean_ckpt)
+    published = rows(table_dir)
+    shutil.copytree(f"{table_dir}/v-0", str(tmp_path / "v0_copy"))
+
+    # killed before batch 1's rename: half-written staging, no commit
+    os.makedirs(f"{table_dir}/_staging-1")
+    with open(f"{table_dir}/_staging-1/part-00000.parquet", "wb") as f:
+        f.write(b"PAR1 torn")
+    assert rows(table_dir) == published  # the table never went away
+    add_file(ordered.offset(500).limit(500), "b1")
+    run(table_dir, ckpt)
+    run(clean, clean_ckpt)
+    want = rows(clean)
+    assert want != published
+    assert rows(table_dir) == want  # batch 1 merged once
+    assert sorted(os.listdir(table_dir)) == ["v-1"]
+
+    # killed after batch 1's rename, before the old version was dropped
+    # and before the checkpoint committed: Spark re-delivers batch 1
+    shutil.copytree(str(tmp_path / "v0_copy"), f"{table_dir}/v-0")
+    _drop_commit(ckpt, 1)
+    assert rows(table_dir) == want  # the highest version is live
+    run(table_dir, ckpt)
+    assert rows(table_dir) == want  # no double count
+    assert sorted(os.listdir(table_dir)) == ["v-1"]
 
 
 def test_upsert_publish_crash_recovery(spark, tmp_path):
-    """A crash between the upsert sink's two publish renames (table ->
-    .old-N, .tmp-N -> table) must not lose the table: on restart the
-    next batch restores the .old-N snapshot and merges into it, instead
-    of merging into nothing and publishing only the in-flight batch."""
+    """A crash inside the upsert sink's commit, before its rename, must
+    not lose the table: the half-written `_staging-N` is dropped on
+    restart and the batch merges into the last committed version,
+    instead of merging into nothing and publishing only its own rows."""
     src = str(tmp_path / "src")
     os.makedirs(src)
     t = ticks(spark, SF).orderBy("trade_time_ms").limit(250)
@@ -1785,22 +1807,23 @@ def test_upsert_publish_crash_recovery(spark, tmp_path):
 
     spool(t.filter(~late), "base")
     run()
-    n_base = spark.read.parquet(table_dir).count()
+    n_base = read_sink_table(spark, table_dir).count()
     assert n_base == t.filter(~late).count()
 
-    # crash inside the publish of batch 1: the table is renamed away and
-    # a half-staged version is left behind
-    os.rename(table_dir, table_dir + ".old-1")
-    os.makedirs(table_dir + ".tmp-1")
+    # crash inside the commit of batch 1: a half-staged version is left
+    # beside the live one
+    os.makedirs(f"{table_dir}/_staging-1")
+    with open(f"{table_dir}/_staging-1/part-00000.parquet", "wb") as f:
+        f.write(b"PAR1 torn")
+    assert read_sink_table(spark, table_dir).count() == n_base
     spool(t.filter(late), "late")
     run()
 
-    got = spark.read.parquet(table_dir)
+    got = read_sink_table(spark, table_dir)
     assert got.count() == 250
     want = {r.trade_id for r in t.select("trade_id").collect()}
     assert {r.bid for r in got.select("bid").collect()} == want
-    assert not glob.glob(table_dir + ".old-*")
-    assert not glob.glob(table_dir + ".tmp-*")
+    assert sorted(os.listdir(table_dir)) == ["v-1"]
 
 
 @pytest.mark.usefixtures("arrow_chunks_of_7")
@@ -1941,3 +1964,78 @@ def test_streaming_perplexity_buckets_match_batch(spark, tmp_path):
     ).collect()
     want = queries()["q_ext_perplexity_buckets"](spark, SF).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+# a driver started outside the checkout: the package is on its own
+# sys.path only, so the Python workers cannot import it
+_STATEFUL_OUTSIDE_CHECKOUT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from binancedatapipelineinaws_spark.session import get_spark
+from binancedatapipelineinaws_spark.streaming import stateful
+spark = get_spark("stateful-outside-checkout")
+candles, events, out = sys.argv[2:5]
+for name, src in (("macd", candles), ("sar", candles),
+                  ("supertrend", candles), ("gapband", events)):
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = (getattr(stateful, name + "_stream")(stream).writeStream
+         .format("parquet").option("path", f"{out}/{name}")
+         .option("checkpointLocation", f"{out}/{name}_ckpt")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination()
+    print(name, spark.read.parquet(f"{out}/{name}").count())
+spark.stop()
+"""
+
+
+def test_stateful_helpers_run_outside_the_checkout(spark, tmp_path):
+    """The MACD, SAR, Supertrend and gap-band folds call module-level
+    helpers (`_tdiv`, `_q6`, `_band_of`); from a driver whose workers
+    cannot import the package, those helpers must still reach the
+    workers, by value.  One micro-batch each: one snapshot row per
+    session day, and one gap per event after each key's first."""
+    import subprocess
+    import sys
+
+    from conftest import REPO
+
+    from binancedatapipelineinaws_spark.operators.indicators import (
+        _candles_c,
+    )
+    from binancedatapipelineinaws_spark.tables import load_table
+
+    candles = _candles_c(spark, SF).select("m", "high_c", "low_c", "close_c")
+    events = load_table(spark, SF, "events")
+    candles.write.parquet(str(tmp_path / "candles"))
+    events.write.parquet(str(tmp_path / "events"))
+    days = candles.select(F.col("m").cast("date")).distinct().count()
+    gaps = events.count() - events.select("user_id", "event_type").distinct().count()
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _STATEFUL_OUTSIDE_CHECKOUT,
+            REPO,
+            str(tmp_path / "candles"),
+            str(tmp_path / "events"),
+            str(tmp_path / "out"),
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    # a worker's Python error sits above the JVM's stack trace
+    errors = [line for line in out.stderr.splitlines() if "Error:" in line]
+    assert out.returncode == 0, "\n".join(errors[:5]) or out.stderr[-3000:]
+    counts = dict(line.split() for line in out.stdout.splitlines())
+    assert counts == {
+        "macd": str(days),
+        "sar": str(days),
+        "supertrend": str(days),
+        "gapband": str(gaps),
+    }

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 # The runtime confs every query assumes.  Timezone matters most: every
 # epoch<->timestamp query assumes UTC, matching DuckDB's naive
 # timestamps.  nanosAsLong lets the parquet reader open TIMESTAMP(NANOS)
-# columns (as longs; ``tables._load_events`` truncates them to micros).
+# columns (as longs; ``tables._events_ts_as_timestamp`` truncates them
+# to micros).
 _SESSION_CONTRACT = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",

@@ -4,7 +4,10 @@ Local mode is the test harness; the configs are chosen to also be the
 right defaults on a large cluster: AQE on (runtime join re-planning,
 skew-join splitting, partition coalescing), UTC session timezone
 (parity with the reference's naive second-granularity timestamps,
-main.py:56), Arrow enabled for the Pandas-UDF slow path.
+main.py:56), Arrow enabled for the Pandas-UDF slow path, and streaming
+checkpoints written through ``FileSystem.create`` + ``rename``: Hadoop's
+default ``FileContext`` rename stats both paths through ``readlink``
+processes when ``libhadoop`` is absent (as in a pip-installed PySpark).
 
 The runtime contract every query assumes is ``_SESSION_CONTRACT``.
 ``get_spark`` bakes it into the sessions it builds, and ``prepare``
@@ -89,6 +92,13 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # FileContext's renameInternal is itself stat-dst-then-rename on
+        # this same ChecksumFileSystem: same files and .crc, no readlink.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.path.join(

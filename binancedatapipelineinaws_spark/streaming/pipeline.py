@@ -272,13 +272,22 @@ def _live_version(table_dir: str) -> int:
     return max((int(v.rsplit("-", 1)[1]) for v in versions), default=-1)
 
 
-def read_sink_table(spark: SparkSession, table_dir: str) -> DataFrame:
-    """The live version of a table written by `upsert_table_sink` or
-    `merge_state_sink`."""
+def _read_live(
+    spark: SparkSession, table_dir: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """The live version of a versioned table.  With `schema` the read
+    is pinned and runs no schema-inference job."""
     live = _live_version(table_dir)
     if live < 0:
         raise FileNotFoundError(f"no committed version under {table_dir}")
-    return spark.read.parquet(os.path.join(table_dir, f"v-{live}"))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(table_dir, f"v-{live}"))
+
+
+def read_sink_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The live version of a table written by `upsert_table_sink` or
+    `merge_state_sink`."""
+    return _read_live(spark, table_dir)
 
 
 def _versioned_table_sink(
@@ -321,8 +330,12 @@ def _versioned_table_sink(
                 shutil.rmtree(os.path.join(table_dir, name))
         if batch_id <= live:
             return  # re-delivered batch: committed before the crash
+        # the live version has the merge's schema: read it pinned, with
+        # no inference job (`.schema` only analyses the plan)
         current = (
-            read_sink_table(batch_df.sparkSession, table_dir)
+            _read_live(
+                batch_df.sparkSession, table_dir, merge(batch_df, None).schema
+            )
             if live >= 0
             else None
         )
